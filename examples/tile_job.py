@@ -36,7 +36,7 @@ def main() -> None:
     ap.add_argument("--res", type=int, default=9, help="cell resolution")
     # resume units are coarse cells: pick so that one unit ≈ one executor-
     # hour of work; planetary crawls use 4-6 (256-4096 spatially-aligned
-    # units — processed in batched single passes, see plans/lineage.py).
+    # units — every pending unit lands in one write, see plans/lineage.py).
     ap.add_argument("--part-res", type=int, default=4, help="resume-unit (coarse cell) resolution")
     ap.add_argument("--cores", type=int, default=None, help="local[N] cores (default: env)")
     args = ap.parse_args()

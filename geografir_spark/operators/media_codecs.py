@@ -69,6 +69,10 @@ def sniff_codec(payload: bytes) -> str:
                     return "avi"
                 return "riff"
             return name
+    # Headerless MP3: an MPEG audio frame sync (11 set bits). JPEG's FF D8
+    # was matched above.
+    if len(payload) >= 2 and payload[0] == 0xFF and payload[1] & 0xE0 == 0xE0:
+        return "mp3"
     # MP4-family: the size-prefixed 'ftyp' box sits at offset 4.
     if len(payload) >= 12 and payload[4:8] == b"ftyp":
         return "mp4"

@@ -9,13 +9,19 @@ precisely the failure mode this module closes):
 - Work is partitioned by an integer **part key** (typically a coarse cell,
   e.g. ``cell_parent(cell, 4)`` — spatially aligned so each unit is one
   cell-range scan).
-- ``run_resumable`` computes the pending part list as planned parts
-  LEFT ANTI JOIN committed lineage rows, processes only those, and appends:
-  - data files under ``<out>/data/part_key=<k>/`` (one directory per unit,
-    so a unit's output is replaced atomically by directory overwrite);
-  - one lineage row per unit to ``<out>/lineage/`` with
-    (part_key, n_rows, checksum, batch_id, committed_ts) — written only
-    AFTER the unit's data lands (write-ahead-data, commit-by-lineage).
+- ``run_resumable`` reads the committed part keys from the lineage table
+  (small) and evaluates the pipeline at most twice per run:
+  - one grouped job yields every planned part with its (n_rows, checksum);
+    when every planned part is committed the run stops here;
+  - one write lands the pending rows (the pipeline LEFT ANTI JOIN the
+    broadcast committed keys) under ``<out>/data/part_key=<k>/`` — one
+    directory per unit, so a unit's output is replaced atomically by
+    dynamic partition overwrite.
+  Then one lineage row per pending unit is appended to ``<out>/lineage/``
+  with (part_key, n_rows, checksum, batch_id, committed_ts) — only AFTER
+  the data lands (write-ahead-data, commit-by-lineage). A crash in between
+  leaves data without lineage: ``verify_lineage`` flags those parts and the
+  next run rewrites them.
 - A unit's checksum = bit_xor of xxhash64 over its rows' columns —
   order-insensitive, cheap, and comparable across reruns for integrity
   verification (``verify_lineage``).
@@ -27,10 +33,10 @@ sandbox fallback behind the same API.
 
 from __future__ import annotations
 
-import os
 import time
 import uuid
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -44,17 +50,37 @@ def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
     try:
         return spark.read.schema(LINEAGE_SCHEMA).parquet(path)
     except Exception:
-        return spark.createDataFrame([], LINEAGE_SCHEMA)
+        return _local_frame(spark, [], LINEAGE_SCHEMA)
 
 
-def pending_parts(spark: SparkSession, planned: DataFrame, out_dir: str) -> DataFrame:
-    """planned(part_key) minus committed lineage — the resume anti-join."""
-    done = read_lineage(spark, out_dir).select("part_key").distinct()
-    return planned.join(done, "part_key", "left_anti")
+def _local_frame(spark: SparkSession, rows: list, schema: str) -> DataFrame:
+    """``rows`` as a driver-local relation. Built from Arrow, unlike a list
+    of tuples it starts no Python worker and runs no Spark job."""
+    names = [f.split()[0] for f in schema.split(",")]
+    cols = list(zip(*rows)) or [()] * len(names)
+    return spark.createDataFrame(pa.table(dict(zip(names, map(list, cols)))), schema)
 
 
-def _checksum_cols(df: DataFrame) -> list:
-    return [f.name for f in df.schema.fields if f.name != "part_key"]
+def pending_rows(df: DataFrame, committed: set) -> DataFrame:
+    """The rows of ``df`` whose part key is not in ``committed``: ``df``
+    itself when nothing is committed, else a broadcast LEFT ANTI join.
+
+    Not an ``isin`` filter: the optimizer pushes a filter on a derived
+    part column below every projection, where a long IN-list over the
+    inlined geocode + Morton expression outgrows whole-stage codegen's
+    64 KB method limit and the stage runs interpreted."""
+    if not committed:
+        return df
+    done = _local_frame(df.sparkSession, [(k,) for k in committed], "part_key bigint")
+    return df.join(F.broadcast(done), "part_key", "left_anti")
+
+
+def _part_stats(df: DataFrame, n: str = "n", ck: str = "ck") -> DataFrame:
+    """Per part key: row count and bit_xor of xxhash64 over the other columns."""
+    cols = [c for c in df.columns if c != "part_key"]
+    return df.groupBy("part_key").agg(
+        F.count("*").alias(n), F.coalesce(F.bit_xor(F.xxhash64(*cols)), F.lit(0)).alias(ck)
+    )
 
 
 def run_resumable(
@@ -62,71 +88,43 @@ def run_resumable(
     out_dir: str,
     *,
     part_col: str = "part_key",
-    parts_per_batch: int | None = None,
     fail_after_parts: int | None = None,
-    unit_batch: int | None = None,
 ) -> dict:
     """Process ``df`` (which must carry ``part_col``) into ``out_dir``,
-    resumably. Returns {"processed": n, "skipped": n, "batch_id": ...}.
+    resumably. Returns {"processed": n, "skipped": n, "batch_id": ...};
+    ``skipped`` counts the planned parts already committed.
 
-    Pending units are processed in chunks of ``unit_batch`` parts, each
-    chunk ONE distributed pass: a dynamic-partition-overwrite write of every
-    part in the chunk (idempotent — a replay overwrites only those
-    partition dirs), then one grouped stats job, then one lineage append
-    that commits the whole chunk. Default is all pending parts in a single
-    chunk — at 4096 spatial units that is 3 Spark jobs, not 12k sequential
-    driver round-trips; choose a smaller ``unit_batch`` to trade throughput
-    for finer crash-resume granularity (a crash loses at most one chunk's
-    work, never its lineage consistency: lineage is appended only after the
-    chunk's data is fully written).
+    One run evaluates ``df`` at most twice: a grouped job for every planned
+    part's (n_rows, checksum) then, if any part is pending, one
+    dynamic-partition-overwrite write of the pending rows (idempotent — a
+    replay overwrites only those partition dirs). Lineage for the pending
+    parts is appended only after that write.
 
-    ``fail_after_parts`` injects a crash after N committed units (test hook
-    for the kill-resume-verify cycle; forces unit_batch=1 so the injection
-    point is exact).
+    ``fail_after_parts`` (test hook for the kill-resume-verify cycle)
+    writes all pending data, commits lineage for the first N pending parts
+    in sorted order, then raises.
     """
     spark = df.sparkSession
     df = df.withColumnRenamed(part_col, "part_key") if part_col != "part_key" else df
-    planned = df.select("part_key").distinct()
-    todo = [r.part_key for r in pending_parts(spark, planned, out_dir).collect()]
-    todo.sort()
-    skipped = planned.count() - len(todo)
-    if parts_per_batch is not None:
-        todo = todo[:parts_per_batch]
+    committed = {r.part_key for r in read_lineage(spark, out_dir).select("part_key").collect()}
+    stats = _part_stats(df).collect()
+    todo = sorted((r for r in stats if r.part_key not in committed), key=lambda r: r.part_key)
     batch_id = uuid.uuid4().hex[:12]
-
-    if fail_after_parts is not None:
-        unit_batch = 1
-    elif unit_batch is None:
-        unit_batch = max(len(todo), 1)
-
-    cols = _checksum_cols(df)
-    processed = 0
-    for start in range(0, len(todo), unit_batch):
-        if fail_after_parts is not None and processed >= fail_after_parts:
-            raise RuntimeError(
-                f"injected failure after {processed} parts (batch {batch_id})"
-            )
-        chunk = todo[start : start + unit_batch]
-        data = df.filter(F.col("part_key").isin(chunk))
-        (
-            data.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("part_key")
-            .parquet(f"{out_dir}/data")
-        )
-        stats = data.groupBy("part_key").agg(
-            F.count("*").alias("n"),
-            F.coalesce(
-                F.expr(f"bit_xor(xxhash64({', '.join(cols)}))"), F.lit(0)
-            ).alias("ck"),
-        ).collect()
-        now = time.time()
-        rows = [(r.part_key, r.n, r.ck, batch_id, now) for r in stats]
-        spark.createDataFrame(rows, LINEAGE_SCHEMA).write.mode("append").parquet(
-            f"{out_dir}/lineage"
-        )
-        processed += len(chunk)
-    return {"processed": processed, "skipped": int(skipped), "batch_id": batch_id}
+    result = {"processed": len(todo), "skipped": len(stats) - len(todo), "batch_id": batch_id}
+    if not todo:
+        return result
+    (
+        pending_rows(df, committed).write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("part_key")
+        .parquet(f"{out_dir}/data")
+    )
+    now = time.time()
+    rows = [(r.part_key, r.n, r.ck, batch_id, now) for r in todo[:fail_after_parts]]
+    _local_frame(spark, rows, LINEAGE_SCHEMA).write.mode("append").parquet(f"{out_dir}/lineage")
+    if len(rows) < len(todo):
+        raise RuntimeError(f"injected failure after {len(rows)} parts (batch {batch_id})")
+    return result
 
 
 def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -136,12 +134,7 @@ def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
 def verify_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
     """Recompute per-part (n_rows, checksum) from the data files and diff
     against lineage — returns rows that disagree (empty == intact)."""
-    data = read_output(spark, out_dir)
-    cols = [c for c in data.columns if c != "part_key"]
-    actual = data.groupBy("part_key").agg(
-        F.count("*").alias("a_rows"),
-        F.coalesce(F.expr(f"bit_xor(xxhash64({', '.join(cols)}))"), F.lit(0)).alias("a_ck"),
-    )
+    actual = _part_stats(read_output(spark, out_dir), "a_rows", "a_ck")
     lin = read_lineage(spark, out_dir).groupBy("part_key").agg(
         F.max("n_rows").alias("n_rows"), F.max("checksum").alias("checksum")
     )

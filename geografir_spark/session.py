@@ -55,7 +55,11 @@ def get_spark(
         # input twice → 2^k copies of the regexp geocode per inferred
         # predicate). Measured 10-50× slowdown on the PIP join; disabling
         # costs us nothing because engine join keys are always non-null by
-        # construction.
+        # construction. This does not cover explicit filters: a filter on a
+        # derived cell/part column is still pushed below the projections and
+        # re-inlines the regexp geocode; a long IN-list there outgrows
+        # codegen's 64 KB limit. Select key sets with a broadcast semi- or
+        # anti-join instead (plans.lineage.pending_rows).
         .config("spark.sql.constraintPropagation.enabled", "false")
         # NOTE: a 48g heap measured 7× SLOWER on allocation-heavy stages
         # (regexp geocode) than 16g — oversized G1 young gen + fresh-page

@@ -102,7 +102,7 @@ def test_lcc_2154_projection_origin_and_scale():
         dlon = 1e-4
         (x1, y1) = lcc_forward(np.array([3.0]), np.array([lat]), _LCC_2154)
         (x2, y2) = lcc_forward(np.array([3.0 + dlon]), np.array([lat]), _LCC_2154)
-        proj_d = float(np.hypot(x2 - x1, y2 - y1))
+        proj_d = float(np.hypot(x2 - x1, y2 - y1)[0])
         s = np.sin(np.radians(lat))
         true_d = a * np.cos(np.radians(lat)) / np.sqrt(1 - e2 * s * s) * np.radians(dlon)
         assert proj_d == pytest.approx(true_d, rel=1e-7)

@@ -178,6 +178,7 @@ def test_sniff_and_compressed_codecs_stay_honest():
     assert sniff_codec(b"\x89PNG\r\n\x1a\n") == "png"
     assert sniff_codec(b"\xff\xd8\xff\xe0JFIF") == "jpeg"
     assert sniff_codec(b"\x00\x00\x00\x18ftypmp42") == "mp4"
+    assert sniff_codec(b"\xff\xfb\x90\x64") == "mp3"  # MPEG frame sync, no ID3 tag
     assert sniff_codec(encode_wav(np.zeros(4, dtype=np.int16))) == "wav"
     for payload, mt in [
         (b"\x89PNG\r\n\x1a\n....", "image"),
