@@ -129,10 +129,10 @@ def main() -> None:
     from geografir_spark.operators.multimodal import (
         decode_media, decoded_stats, resize_frames, sample_frames,
     )
+    from geografir_spark.session import default_parallelism
 
     spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
+        SparkSession.builder.master(f"local[{default_parallelism()}]")
         .config("spark.sql.shuffle.partitions", "16")
         .config("spark.ui.enabled", "false")
         .appName("media_pipeline")

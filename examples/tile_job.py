@@ -38,7 +38,8 @@ def main() -> None:
     # hour of work; planetary crawls use 4-6 (256-4096 spatially-aligned
     # units — every pending unit lands in one write, see plans/lineage.py).
     ap.add_argument("--part-res", type=int, default=4, help="resume-unit (coarse cell) resolution")
-    ap.add_argument("--cores", type=int, default=None, help="local[N] cores (default: env)")
+    ap.add_argument("--cores", type=int, default=None,
+                    help="local[N] cores (default: SPARK_GRAFT_CPUS, else all cores)")
     args = ap.parse_args()
 
     from geografir_spark.geo import cells, geocode

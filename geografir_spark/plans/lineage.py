@@ -16,7 +16,10 @@ precisely the failure mode this module closes):
   - one write lands the pending rows (the pipeline LEFT ANTI JOIN the
     broadcast committed keys) under ``<out>/data/part_key=<k>/`` — one
     directory per unit, so a unit's output is replaced atomically by
-    dynamic partition overwrite.
+    dynamic partition overwrite. The rows are clustered by unit first, so
+    each unit is one file written by one task, and up to one task per core
+    writes the units in parallel. A unit much larger than the rest makes
+    its task the longest.
   Then one lineage row per pending unit is appended to ``<out>/lineage/``
   with (part_key, n_rows, checksum, batch_id, committed_ts) — only AFTER
   the data lands (write-ahead-data, commit-by-lineage). A crash in between
@@ -97,8 +100,11 @@ def run_resumable(
     One run evaluates ``df`` at most twice: a grouped job for every planned
     part's (n_rows, checksum) then, if any part is pending, one
     dynamic-partition-overwrite write of the pending rows (idempotent — a
-    replay overwrites only those partition dirs). Lineage for the pending
-    parts is appended only after that write.
+    replay overwrites only those partition dirs). That write gives each
+    pending unit exactly one file, and runs min(pending units, cores)
+    tasks; units are hashed to tasks, so one task may write several units
+    while another writes none. Lineage for the pending parts is appended
+    only after it.
 
     ``fail_after_parts`` (test hook for the kill-resume-verify cycle)
     writes all pending data, commits lineage for the first N pending parts
@@ -113,8 +119,13 @@ def run_resumable(
     result = {"processed": len(todo), "skipped": len(stats) - len(todo), "batch_id": batch_id}
     if not todo:
         return result
+    # Cluster by unit so each unit is one file, written by one of at most
+    # one task per core. The count must be explicit: AQE coalesces an
+    # unnumbered repartition of small output back to a single task.
+    writers = min(len(todo), spark.sparkContext.defaultParallelism)
     (
-        pending_rows(df, committed).write.mode("overwrite")
+        pending_rows(df, committed).repartition(writers, "part_key")
+        .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("part_key")
         .parquet(f"{out_dir}/data")

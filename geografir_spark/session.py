@@ -14,7 +14,7 @@ from pyspark.sql import SparkSession
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 
 
 def get_spark(
@@ -36,6 +36,10 @@ def get_spark(
         # shuffle partitions ≈ 2× cores locally; on a real cluster this is
         # sized by AQE's coalesce from an intentionally high initial value.
         .config("spark.sql.shuffle.partitions", str(max(2 * n, 8)))
+        # a read over more than 32 paths lists them in a Spark job; the
+        # 10000 default gives it one task per directory (256 for a lineage
+        # output of 256 units). One listing task per core suffices.
+        .config("spark.sql.sources.parallelPartitionDiscovery.parallelism", str(n))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

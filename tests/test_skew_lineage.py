@@ -172,6 +172,60 @@ def test_lineage_crash_window_flagged_then_healed(spark, tmp_path):
     assert lineage.verify_lineage(spark, out_dir).count() == 0
 
 
+@pytest.fixture()
+def units40_out(spark, tmp_path):
+    """A fresh run over 40 units from a 4-partition frame: more units than
+    the 32-path threshold above which Spark lists directories in a job."""
+    from geografir_spark.plans import lineage
+
+    out_dir = str(tmp_path / "out")
+    df = spark.range(4000, numPartitions=4).selectExpr("id % 40 AS part_key", "id AS v")
+    r = lineage.run_resumable(df, out_dir)
+    assert r["processed"] == 40 and r["skipped"] == 0
+    return out_dir
+
+
+def test_lineage_write_one_file_per_unit_from_parallel_writers(spark, units40_out):
+    """The pending rows are clustered by unit before the write: each unit
+    directory holds exactly one file, and the files come from more than
+    one task. Unclustered, every input task writes a file into every unit
+    it touches; coalesced, one task writes them all."""
+    import glob
+    import os
+
+    from geografir_spark.plans import lineage
+
+    unit_dirs = glob.glob(f"{units40_out}/data/part_key=*/")
+    assert len(unit_dirs) == 40
+    files = [glob.glob(f"{d}*.parquet") for d in unit_dirs]
+    assert all(len(f) == 1 for f in files), sorted(map(len, files))
+    task_ids = {re.match(r"part-(\d+)", os.path.basename(f[0])).group(1) for f in files}
+    assert len(task_ids) > 1
+    assert lineage.verify_lineage(spark, units40_out).count() == 0
+
+
+def test_lineage_read_output_listing_sized_to_cores(spark, units40_out):
+    """Listing the 40 unit directories runs as a Spark job whose task count
+    follows the session's cores, not one task per directory."""
+    from geografir_spark.plans import lineage
+
+    sc = spark.sparkContext
+    group = "lineage-read-output-listing"
+    sc.setJobGroup(group, "read_output")
+    try:
+        lineage.read_output(spark, units40_out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup(group)
+    stages = [st.getStageInfo(s) for j in jobs for s in st.getJobInfo(j).stageIds]
+    assert stages and None not in stages
+    assert max(s.numTasks for s in stages) <= sc.defaultParallelism, [
+        s.numTasks for s in stages
+    ]
+
+
 def test_salted_topk_equals_unsalted(spark, skewed_df):
     """The two-phase salted top-k (top-k per (cell, salt), then top-k of the
     survivors) must return EXACTLY the unsalted window result — the
