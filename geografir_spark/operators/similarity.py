@@ -40,6 +40,12 @@ def _norm_expr(a: str) -> str:
     return f"sqrt({_dot_expr(a, a)})"
 
 
+# cosine_topk broadcasts every probe vector to every task and scores it
+# against every target; past this many probes use ivf_topk or
+# lsh_bucketed_topk, whose shuffle grows with the candidates instead.
+MAX_EXACT_PROBES = 10_000
+
+
 def cosine_topk(
     probes: DataFrame,
     targets: DataFrame,
@@ -51,7 +57,18 @@ def cosine_topk(
     target_vec: str = "tvec",
     exclude_self: bool = True,
 ) -> DataFrame:
-    """Exact brute-force cosine top-k: (probe_id, neighbor_id, rank)."""
+    """Exact brute-force cosine top-k: (probe_id, neighbor_id, rank).
+
+    Raises ``ValueError`` above ``MAX_EXACT_PROBES`` probes (one capped
+    count job), as ``hull.convex_hull`` guards its driver merge."""
+    n_probes = probes.limit(MAX_EXACT_PROBES + 1).count()
+    if n_probes > MAX_EXACT_PROBES:
+        raise ValueError(
+            f"cosine_topk: over {MAX_EXACT_PROBES} probes ({n_probes} counted,"
+            " capped) — the exact path broadcasts every probe and scores it"
+            " against every target; use ivf_topk or lsh_bucketed_topk for"
+            " probe sets this large"
+        )
     # broadcast the smaller side (probes are few); targets stream through
     j = F.broadcast(probes).crossJoin(targets)
     if exclude_self:

@@ -66,10 +66,11 @@ def test_knn_straggler_no_cartesian(spark, monkeypatch):
     cartesian over the full target table. localCheckpoint is stubbed to
     identity so the WHOLE multi-round pipeline stays in one lazy plan the
     assertion can see."""
-    from pyspark.sql import DataFrame
+    from pyspark.sql.classic.dataframe import DataFrame
 
     from geografir_spark.operators.knn import knn_join
 
+    # the classic DataFrame overrides localCheckpoint, so the stub goes on it
     monkeypatch.setattr(
         DataFrame, "localCheckpoint", lambda self, eager=True: self
     )
@@ -113,21 +114,6 @@ def test_knn_disk_budget_skips_to_bucketed_coverage(spark):
     assert "CartesianProduct" not in plan
     got = sorted(out.collect(), key=lambda r: r["rank"])
     assert [r["tid"] for r in got] == [7, 8]  # exact nearest-first
-
-
-def test_knn_max_rounds_deprecation_warns(spark):
-    import pytest as _pytest
-
-    from geografir_spark.operators.knn import knn_join
-
-    qs = spark.createDataFrame(
-        [(1, 0.0, 0.0)], "qid bigint, qx double, qy double"
-    )
-    ts = spark.createDataFrame(
-        [(7, 1.0, 1.0)], "tid bigint, tx double, ty double"
-    )
-    with _pytest.warns(DeprecationWarning, match="max_rounds"):
-        knn_join(qs, ts, k=1, res=4, max_rounds=3)
 
 
 def test_dedup_on_empty_documents(spark):

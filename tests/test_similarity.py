@@ -165,3 +165,19 @@ def test_semantic_dedup_deterministic(spark):
     b = sorted(map(tuple, semantic_dedup(emb, tau=0.464, n_clusters=16).collect()))
     assert a == b
     assert len(a) == emb.count()
+
+
+def test_exact_cosine_topk_refuses_oversized_probe_set(spark, monkeypatch):
+    """The exact path broadcasts its probes: past MAX_EXACT_PROBES it
+    raises before planning the cross join and names the scalable paths."""
+    from geografir_spark.operators import similarity
+
+    monkeypatch.setattr(similarity, "MAX_EXACT_PROBES", 4)
+    vecs = spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in range(6)], "vec_id LONG, v ARRAY<DOUBLE>"
+    )
+    probes = vecs.selectExpr("vec_id AS probe_id", "v AS pvec")
+    targets = vecs.selectExpr("vec_id AS neighbor_id", "v AS tvec")
+    assert similarity.cosine_topk(probes.limit(4), targets, k=2).count() == 8
+    with pytest.raises(ValueError, match=r"over 4 probes \(5 counted.*ivf_topk"):
+        similarity.cosine_topk(probes, targets, k=2)
