@@ -25,3 +25,7 @@ distributed, columnar, Catalyst-friendly Spark engine:
 """
 
 __version__ = "0.1.0"
+
+from geografir_spark.shipping import install_zip_cache
+
+install_zip_cache()

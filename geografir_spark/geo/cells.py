@@ -422,28 +422,6 @@ def disk_np(cell: int, k: int) -> np.ndarray:
     return encode_idx_np(gx.ravel(), gy.ravel(), res)
 
 
-def disk_vec_np(cell_arr: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
-    """Vectorized filled k-ring: for an array of cells (all at the same
-    resolution), return (row_index, neighbor_cell) pairs for every cell in
-    each input cell's chebyshev-≤k disk, clipped at the world edge.
-
-    Used by the kNN ring-expansion explode (mapInPandas)."""
-    cell_arr = np.asarray(cell_arr, dtype=np.int64)
-    if len(cell_arr) == 0:
-        return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.int64)
-    xi, yi, res = decode_np(cell_arr)
-    r = int(res[0])
-    n = 1 << r
-    offs = np.arange(-k, k + 1)
-    dx, dy = np.meshgrid(offs, offs)
-    dx, dy = dx.ravel(), dy.ravel()  # (m,)
-    gx = xi[:, None] + dx[None, :]  # (rows, m)
-    gy = yi[:, None] + dy[None, :]
-    ok = (gx >= 0) & (gx < n) & (gy >= 0) & (gy < n)
-    rows = np.broadcast_to(np.arange(len(cell_arr))[:, None], gx.shape)[ok]
-    return rows, encode_idx_np(gx[ok], gy[ok], r)
-
-
 def cover_bbox_np(minx: float, miny: float, maxx: float, maxy: float, res: int) -> np.ndarray:
     """Cell ids covering an axis-aligned bbox (inclusive of edge cells)."""
     _check_res(res)

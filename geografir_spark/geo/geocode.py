@@ -98,6 +98,12 @@ def with_geocode(df, text_col: str, seed_col: str, lon_out: str = "lon", lat_out
     factory therefore disables ``spark.sql.constraintPropagation.enabled``
     (see session.py); a nondeterministic barrier was rejected because it
     knocks the projection out of whole-stage codegen (~100× slower).
+
+    A filter on a derived cell/part column is pushed below these
+    projections too: a long ``isin`` IN-list over the inlined regexp +
+    Morton expression outgrows whole-stage codegen's 64 KB method limit and
+    the stage runs interpreted. Select key sets with a broadcast semi/anti
+    join instead (``plans.lineage.pending_rows``).
     """
     from geografir_spark.geo import cells
 

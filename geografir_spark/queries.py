@@ -57,7 +57,6 @@ def register(name: str, oracle: "Optional[str | Callable[..., str]]"):
 
         wrapped.__name__ = fn.__name__
         wrapped.__doc__ = fn.__doc__
-        wrapped.__orig_fn__ = fn  # fingerprinting needs the real source
         QUERIES[name] = QueryDef(wrapped, oracle)
         return fn
 
@@ -5144,42 +5143,3 @@ def q_unigram_logprob_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, _unigram_logprob_sql("spark"), repartition=True,
         no_generate_filter_inference=True,
     )
-
-
-
-# ---------------------------------------------------------------------------
-# Driver-window ordering — DERIVED from a recorded manifest, not hand-listed
-# (r5; VERDICT r4 items #1/#8, ADVICE high-severity finding).
-#
-# The external verification driver hashes only the FIRST 50 entries of
-# ``queries()`` (observed r2-r4: the checked set is exactly
-# ``list(QUERIES)[:50]``). The r3/r4 hand-curated rotation missed exactly
-# the failure the judge then caught: queries whose shared generator changed
-# after their last sample kept stale green rows. The ordering below is now
-# computed by ``geografir_spark.driver_window.derive_window``:
-#
-#   1. changed-since-last-driver-sample (per-query fingerprint vs the
-#      committed ``driver_manifest.json``) — MUST re-enter the window;
-#   2. five continuity anchors;
-#   3. oldest-green-first fill of the remaining slots.
-#
-# tests/test_driver_window.py fails if a changed query is out-of-window.
-# The FULL registry is still verified on every pytest run by
-# tests/test_oracle_parity.py (all queries vs DuckDB at sf0.01) — the
-# prefix window never substitutes for that committed gate; it exists only
-# because the external driver samples a prefix, a limitation surfaced in
-# SURVEY.md §6 / README.md rather than steered around.
-# ---------------------------------------------------------------------------
-from geografir_spark import driver_window as _dw
-
-
-def _reorder_registry() -> None:
-    # strict=False: an overflowing changed set must warn, not make the
-    # package unimportable (the tripwire test runs strict=True)
-    ordered_names = _dw.derive_window(QUERIES, globals(), strict=False)
-    ordered = {n: QUERIES[n] for n in ordered_names}
-    QUERIES.clear()
-    QUERIES.update(ordered)
-
-
-_reorder_registry()

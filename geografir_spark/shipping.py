@@ -7,15 +7,25 @@ notebooks), executors have no such zip — mapInPandas kernels that import
 working directory isn't the repo root. ``ensure_shipped`` zips the package
 once per process and registers it with ``SparkContext.addPyFile`` once per
 context; every operator entry point calls it.
+
+On a worker, importing the package also calls ``install_zip_cache``:
+pyspark calls ``importlib.invalidate_caches()`` at the start of every task,
+and on CPython < 3.13 that re-reads the central directory of every zip on
+the worker's path (the pyspark zip once per subpackage importer, the spark
+jar, this package's zip), about 0.3 s a task. The hook re-reads an archive
+only when its (mtime, size) changed since this process last read it.
 """
 
 from __future__ import annotations
 
 import os
+import sys
 import tempfile
 import zipfile
+import zipimport
 
 from pyspark.sql import SparkSession
+from pyspark.taskcontext import TaskContext
 
 _SENTINEL = "_geografir_spark_shipped"
 _zip_path: str | None = None
@@ -46,3 +56,32 @@ def ensure_shipped(spark: SparkSession) -> None:
         return
     sc.addPyFile(package_zip())
     setattr(sc, _SENTINEL, True)
+
+
+def install_zip_cache() -> None:
+    """In a PySpark worker on CPython < 3.13, make
+    ``zipimporter.invalidate_caches`` re-read an archive's directory only
+    when the archive's ``(st_mtime_ns, st_size)`` differs from the last
+    read in this process. Elsewhere, and when already installed, a no-op."""
+    eager = zipimport.zipimporter.invalidate_caches
+    if (sys.version_info >= (3, 13) or getattr(eager, "stat_checked", False)
+            or TaskContext.get() is None):
+        return
+    read_at: dict[str, tuple[int, int]] = {}
+
+    def invalidate_caches(self) -> None:
+        try:
+            st = os.stat(self.archive)
+        except OSError:
+            return eager(self)
+        # stat before the read: a write during the read shows on the next call
+        key = (st.st_mtime_ns, st.st_size)
+        files = zipimport._zip_directory_cache.get(self.archive)
+        if files is not None and read_at.get(self.archive) == key:
+            self._files = files
+            return
+        eager(self)
+        read_at[self.archive] = key
+
+    invalidate_caches.stat_checked = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches

@@ -319,29 +319,3 @@ def test_bng_roundtrip_property(lon, lat):
     lon2, lat2 = g(*f(np.asarray([lon]), np.asarray([lat])))
     assert abs(float(lon2[0]) - lon) < 1e-6
     assert abs(float(lat2[0]) - lat) < 1e-6
-
-
-@given(st.recursive(
-    st.one_of(st.none(), st.booleans(), st.integers(), st.text(max_size=8),
-              st.binary(max_size=8)),
-    lambda leaf: st.one_of(
-        st.lists(leaf, max_size=4),
-        st.frozensets(st.integers(), max_size=4),
-        st.dictionaries(st.text(max_size=4), leaf, max_size=4),
-    ),
-    max_leaves=10,
-))
-@settings(max_examples=80, deadline=None)
-def test_stable_repr_total_and_deterministic(val):
-    """_stable_repr must never raise and must be equal for equal values
-    regardless of construction/iteration order (the PYTHONHASHSEED and
-    memory-address instabilities are pinned separately in
-    test_driver_window.py)."""
-    from geografir_spark.driver_window import _stable_repr
-
-    r1 = _stable_repr(val)
-    assert isinstance(r1, str)
-    if isinstance(val, dict):
-        assert _stable_repr(dict(reversed(list(val.items())))) == r1
-    if isinstance(val, frozenset):
-        assert _stable_repr(frozenset(sorted(val, reverse=True))) == r1
