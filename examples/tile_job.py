@@ -12,8 +12,10 @@ pass the zip explicitly):
         --input s3a://bucket/pages --output s3a://bucket/tiles --res 9
 
 Re-running after a failure resumes: completed spatial units are skipped via
-the lineage anti-join (plans/lineage.py), partial units are overwritten
-atomically.
+the lineage anti-join (plans/lineage.py). Each run lands its pending units
+as one new batch of files, and a unit's rows become visible only when its
+lineage row names that batch, so rows a crashed run left behind are never
+read.
 """
 
 from __future__ import annotations
@@ -36,7 +38,9 @@ def main() -> None:
     ap.add_argument("--res", type=int, default=9, help="cell resolution")
     # resume units are coarse cells: pick so that one unit ≈ one executor-
     # hour of work; planetary crawls use 4-6 (256-4096 spatially-aligned
-    # units — every pending unit lands in one write, see plans/lineage.py).
+    # units). The unit count sets the lineage rows, not the file count: all
+    # pending units land in one batch of one file per writer
+    # (plans/lineage.py).
     ap.add_argument("--part-res", type=int, default=4, help="resume-unit (coarse cell) resolution")
     ap.add_argument("--cores", type=int, default=None,
                     help="local[N] cores (default: SPARK_GRAFT_CPUS, else all cores)")

@@ -37,8 +37,9 @@ def get_spark(
         # sized by AQE's coalesce from an intentionally high initial value.
         .config("spark.sql.shuffle.partitions", str(max(2 * n, 8)))
         # a read over more than 32 paths lists them in a Spark job; the
-        # 10000 default gives it one task per directory (256 for a lineage
-        # output of 256 units). One listing task per core suffices.
+        # 10000 default gives it one task per directory (one per batch in
+        # a lineage output that many runs appended to). One listing task
+        # per core suffices.
         .config("spark.sql.sources.parallelPartitionDiscovery.parallelism", str(n))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -99,13 +99,22 @@ def test_lineage_resume_and_verify(spark):
     r2 = lineage.run_resumable(df, out_dir)
     assert r2["processed"] == 0 and r2["skipped"] == 10
 
-    # corrupt a partition → verify flags exactly that part
+    # corrupt the batch file holding unit 3 → verify flags exactly that part
     import glob
     import os
 
-    victim = glob.glob(f"{out_dir}/data/part_key=3/*.parquet")
-    for f in victim:
-        os.remove(f)
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    victims = [
+        f for f in glob.glob(f"{out_dir}/data/batch_id=*/*.parquet")
+        if 3 in pq.read_table(f, columns=["part_key"]).column("part_key").to_pylist()
+    ]
+    assert len(victims) == 1
+    t = pq.read_table(victims[0])
+    pq.write_table(t.filter(pc.not_equal(t["part_key"], 3)), victims[0])
+    # the Hadoop checksum sidecar still describes the old bytes
+    os.remove(os.path.join(os.path.dirname(victims[0]), f".{os.path.basename(victims[0])}.crc"))
     bad = lineage.verify_lineage(spark, out_dir).collect()
     assert len(bad) == 1 and bad[0].part_key == 3
     shutil.rmtree(out_dir)
@@ -153,15 +162,17 @@ def test_lineage_geocoded_pipeline_resumes_via_anti_join(spark, geocoded_units, 
 
 def test_lineage_crash_window_flagged_then_healed(spark, tmp_path):
     """An injected crash lands every pending part's data but commits lineage
-    for only the first N parts (sorted). ``verify_lineage`` flags exactly
-    the parts with data and no lineage row; the resume clears them."""
+    for only the first N parts (sorted). ``read_output`` returns only the
+    committed parts; ``verify_lineage`` flags exactly the parts with data
+    and no lineage row; the resume commits them in a new batch, and the
+    crashed batch's rows for them stay invisible."""
     from geografir_spark.plans import lineage
 
     out_dir = str(tmp_path / "out")
     df = spark.range(600).selectExpr("id % 6 AS part_key", "id AS value")
     with pytest.raises(RuntimeError, match="injected failure after 2 parts"):
         lineage.run_resumable(df, out_dir, fail_after_parts=2)
-    assert lineage.read_output(spark, out_dir).count() == 600
+    assert lineage.read_output(spark, out_dir).count() == 200
     assert {r.part_key for r in lineage.read_lineage(spark, out_dir).collect()} == {0, 1}
     bad = lineage.verify_lineage(spark, out_dir).collect()
     assert sorted(r.part_key for r in bad) == [2, 3, 4, 5]
@@ -169,13 +180,57 @@ def test_lineage_crash_window_flagged_then_healed(spark, tmp_path):
 
     r = lineage.run_resumable(df, out_dir)
     assert r["processed"] == 4 and r["skipped"] == 2
+    out = lineage.read_output(spark, out_dir)
+    assert out.count() == 600 and out.select("value").distinct().count() == 600
+    assert lineage.verify_lineage(spark, out_dir).count() == 0
+
+
+def test_lineage_unit_committed_twice_read_once(spark, tmp_path):
+    """A lost lineage listing makes the next run commit every unit again,
+    in a second batch. With both lineage files back, each unit has two
+    lineage rows; only its latest batch is read, and verify is clean."""
+    import glob
+    import os
+
+    from geografir_spark.plans import lineage
+
+    out_dir = str(tmp_path / "out")
+    df = spark.range(300).selectExpr("id % 3 AS part_key", "id AS value")
+    lineage.run_resumable(df, out_dir)
+    shutil.move(f"{out_dir}/lineage", str(tmp_path / "lineage1"))
+    r = lineage.run_resumable(df, out_dir)
+    assert r["processed"] == 3 and r["skipped"] == 0
+    for f in glob.glob(str(tmp_path / "lineage1" / "*.parquet")):
+        shutil.copy(f, f"{out_dir}/lineage/{os.path.basename(f)}")
+    assert lineage.read_lineage(spark, out_dir).count() == 6
+    assert lineage.read_output(spark, out_dir).count() == 300
+    assert lineage.verify_lineage(spark, out_dir).count() == 0
+
+
+def test_lineage_numeric_looking_batch_ids(spark, tmp_path, monkeypatch):
+    """Partition discovery infers a number from an all-digit or
+    exponent-shaped directory value: as numbers, the crashed batch
+    "000000000001" and its resume "1e0000000000" would both read as 1, and
+    the crashed batch's rows would show. Batch ids must read back as the
+    strings the lineage holds."""
+    import uuid
+
+    from geografir_spark.plans import lineage
+
+    ids = iter(["00000000-0001-0000-0000-000000000000", "1e000000-0000-0000-0000-000000000000"])
+    monkeypatch.setattr(uuid, "uuid4", lambda: uuid.UUID(next(ids)))
+    out_dir = str(tmp_path / "out")
+    df = spark.range(200).selectExpr("id % 4 AS part_key", "id AS value")
+    with pytest.raises(RuntimeError, match="injected failure after 0 parts"):
+        lineage.run_resumable(df, out_dir, fail_after_parts=0)
+    assert lineage.run_resumable(df, out_dir)["processed"] == 4
+    assert lineage.read_output(spark, out_dir).count() == 200
     assert lineage.verify_lineage(spark, out_dir).count() == 0
 
 
 @pytest.fixture()
 def units40_out(spark, tmp_path):
-    """A fresh run over 40 units from a 4-partition frame: more units than
-    the 32-path threshold above which Spark lists directories in a job."""
+    """A fresh run over 40 units from a 4-partition frame."""
     from geografir_spark.plans import lineage
 
     out_dir = str(tmp_path / "out")
@@ -186,34 +241,57 @@ def units40_out(spark, tmp_path):
 
 
 def test_lineage_write_one_file_per_unit_from_parallel_writers(spark, units40_out):
-    """The pending rows are clustered by unit before the write: each unit
-    directory holds exactly one file, and the files come from more than
-    one task. Unclustered, every input task writes a file into every unit
-    it touches; coalesced, one task writes them all."""
+    """The run lands as one batch of at most one file per core, not one
+    directory per unit. The pending rows are clustered by unit before the
+    write: each unit's rows are in exactly one file, and the files come
+    from more than one task. Unclustered, every input task writes a file
+    holding every unit it touches; coalesced, one task writes them all."""
     import glob
     import os
 
     from geografir_spark.plans import lineage
 
-    unit_dirs = glob.glob(f"{units40_out}/data/part_key=*/")
-    assert len(unit_dirs) == 40
-    files = [glob.glob(f"{d}*.parquet") for d in unit_dirs]
-    assert all(len(f) == 1 for f in files), sorted(map(len, files))
-    task_ids = {re.match(r"part-(\d+)", os.path.basename(f[0])).group(1) for f in files}
+    assert not glob.glob(f"{units40_out}/data/**/part_key=*", recursive=True)
+    (batch,) = glob.glob(f"{units40_out}/data/batch_id=*/")
+    files = glob.glob(f"{batch}*.parquet")
+    assert 1 <= len(files) <= min(40, spark.sparkContext.defaultParallelism), files
+    per_unit = (
+        spark.read.parquet(batch)
+        .withColumn("file", F.input_file_name())
+        .groupBy("part_key").agg(F.countDistinct("file").alias("files"))
+        .collect()
+    )
+    assert len(per_unit) == 40 and all(r.files == 1 for r in per_unit)
+    task_ids = {re.match(r"part-(\d+)", os.path.basename(f)).group(1) for f in files}
     assert len(task_ids) > 1
     assert lineage.verify_lineage(spark, units40_out).count() == 0
 
 
-def test_lineage_read_output_listing_sized_to_cores(spark, units40_out):
-    """Listing the 40 unit directories runs as a Spark job whose task count
-    follows the session's cores, not one task per directory."""
+@pytest.fixture()
+def batches34_out(spark, tmp_path):
+    """34 runs into one output, each committing one new unit: 34 batch
+    directories, more than the 32-path threshold above which Spark lists
+    directories in a job."""
+    from geografir_spark.plans import lineage
+
+    out_dir = str(tmp_path / "out")
+    df = spark.range(34).selectExpr("id AS part_key", "id * 7 AS v")
+    for k in range(34):
+        r = lineage.run_resumable(df.filter(f"part_key <= {k}"), out_dir)
+        assert r["processed"] == 1 and r["skipped"] == k
+    return out_dir
+
+
+def test_lineage_read_output_listing_sized_to_cores(spark, batches34_out):
+    """Listing the 34 batch directories runs as a Spark job whose task
+    count follows the session's cores, not one task per directory."""
     from geografir_spark.plans import lineage
 
     sc = spark.sparkContext
     group = "lineage-read-output-listing"
     sc.setJobGroup(group, "read_output")
     try:
-        lineage.read_output(spark, units40_out)
+        out = lineage.read_output(spark, batches34_out)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
@@ -224,6 +302,7 @@ def test_lineage_read_output_listing_sized_to_cores(spark, units40_out):
     assert max(s.numTasks for s in stages) <= sc.defaultParallelism, [
         s.numTasks for s in stages
     ]
+    assert out.count() == 34
 
 
 def test_salted_topk_equals_unsalted(spark, skewed_df):
