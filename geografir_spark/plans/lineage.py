@@ -42,6 +42,7 @@ import time
 import uuid
 
 import pyarrow as pa
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -51,10 +52,15 @@ LINEAGE_SCHEMA = (
 
 
 def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
+    """The lineage table of ``out_dir``; empty when nothing was committed
+    yet. Only a missing path reads as empty: any other error raises, since
+    an empty lineage makes ``run_resumable`` recommit every unit."""
     path = f"{out_dir}/lineage"
     try:
         return spark.read.schema(LINEAGE_SCHEMA).parquet(path)
-    except Exception:
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
         return _local_frame(spark, [], LINEAGE_SCHEMA)
 
 
@@ -147,8 +153,8 @@ def run_resumable(
 def _committed(spark: SparkSession, out_dir: str) -> DataFrame:
     """Each unit's latest lineage row: (part_key, batch_id, n_rows, checksum).
 
-    A unit can have several rows: ``read_lineage`` reads a failed listing as
-    no lineage, and the next run then commits its units again."""
+    A unit can have several rows: a lineage directory that went missing
+    reads as no lineage, and the next run then commits its units again."""
     latest = F.max_by(F.struct("batch_id", "n_rows", "checksum"), "committed_ts")
     return read_lineage(spark, out_dir).groupBy("part_key").agg(latest.alias("c")).select(
         "part_key", "c.*"

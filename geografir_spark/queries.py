@@ -21,7 +21,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from geografir_spark.geo import cells, geocode
-from geografir_spark.sources.pages import load_pages, load_table, pages_select_sql
+from geografir_spark.sources.pages import (
+    load_pages,
+    load_table,
+    pages_select_sql,
+    table_sql,
+)
 
 RES = 9          # default tiling resolution (512×512 world grid — mirrors the
                  # reference's 512-px block constant, profiles.py:81)
@@ -417,9 +422,7 @@ def q_zone_area_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from geografir_spark.geo import kernels as gk
     from geografir_spark.geo import wkt as gwkt
-    from geografir_spark.shipping import ensure_shipped
 
-    ensure_shipped(spark)
     zones = load_table(spark, sf_dir, "nation").selectExpr(
         "n_nationkey AS zone_id", f"{_L_X0} AS x0", f"{_L_Y0} AS y0"
     ).selectExpr("zone_id", _L_WKT_SQL)
@@ -498,9 +501,7 @@ def q_linestring_cell_cover(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     from geografir_spark.geo import kernels as gk
-    from geografir_spark.shipping import ensure_shipped
 
-    ensure_shipped(spark)
     zones = load_table(spark, sf_dir, "nation").selectExpr(
         "n_nationkey AS zone_id", f"{_L_X0} AS x0", f"{_L_Y0} AS y0"
     ).selectExpr(
@@ -1000,9 +1001,6 @@ def q_transform_webmercator(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql import types as T
 
-    from geografir_spark.shipping import ensure_shipped
-
-    ensure_shipped(spark)
     pts = _points_df(spark, sf_dir)
 
     schema = T.StructType(
@@ -1040,63 +1038,34 @@ def q_transform_webmercator(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Dedup / text-analysis / similarity (training-data-pipeline operators)
 # ---------------------------------------------------------------------------
 
-_INFER_GEN_RULE = "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
-
-
 def _sql_query(
     spark: SparkSession,
     sf_dir: str,
     spark_sql: str,
     views: tuple = ("documents",),
     repartition: bool = False,
-    no_generate_filter_inference: bool = False,
 ) -> DataFrame:
-    """Run generated Spark-dialect SQL against temp views of the sf tables.
+    """Run generated Spark-dialect SQL with its input tables bound inside
+    the statement: each name in ``views`` becomes a CTE over the table's
+    scan (``sources.pages.table_sql``) wrapped around ``spark_sql``. No
+    temp view is registered, so a caller's own views of the same names
+    are neither read nor replaced, and concurrent queries on one session
+    cannot see each other's inputs.
 
-    ``repartition=True`` spreads each view across cores first — the test
-    parquets are single-row-group files (scan parallelism 1), so map-heavy
-    per-document work (tokenize, md5) would otherwise run on one task.
-    Production multi-file tables don't need it (the scan is already split).
-
-    ``no_generate_filter_inference=True`` excludes Catalyst's
-    InferFiltersFromGenerate for THIS plan only: the rule wraps every
-    ``explode(e)`` in ``isnotnull(e) AND size(e) > 0`` and filter pushdown
-    then substitutes the alias, so a computed gram/shingle array gets
-    re-evaluated two extra times per input row on the dominant scan (3×
-    CPU on the hot path — explode already skips null/empty arrays, so the
-    filter is semantically redundant for our generators). The exclusion is
-    baked into this DataFrame by forcing its optimizedPlan under the conf
-    and restoring the conf before returning — no session-level leakage."""
-    for v in views:
-        df = load_table(spark, sf_dir, v)
-        if repartition:
-            df = df.repartition(spark.sparkContext.defaultParallelism)
-        df.createOrReplaceTempView(v)
-    out = spark.sql(spark_sql)
-    if no_generate_filter_inference:
-        out = _without_generate_filter_inference(spark, out)
-    return out
-
-
-def _without_generate_filter_inference(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Pin InferFiltersFromGenerate OFF for this one plan (see _sql_query
-    docstring): force the Dataset's lazily-cached optimizedPlan under the
-    exclusion conf, then restore the conf — later actions reuse the cached
-    plan, so nothing leaks to other queries in the session."""
-    key = "spark.sql.optimizer.excludedRules"
-    try:
-        old = spark.conf.get(key)
-    except Exception:
-        old = None
-    spark.conf.set(key, f"{old},{_INFER_GEN_RULE}" if old else _INFER_GEN_RULE)
-    try:
-        df._jdf.queryExecution().optimizedPlan()
-    finally:
-        if old:
-            spark.conf.set(key, old)
-        else:
-            spark.conf.unset(key)
-    return df
+    ``repartition=True`` spreads each table across cores first (a
+    ``REPARTITION`` hint) — the test parquets are single-row-group files
+    (scan parallelism 1), so map-heavy per-document work (tokenize, md5)
+    would otherwise run on one task. Production multi-file tables don't
+    need it (the scan is already split)."""
+    hint = (
+        f"/*+ REPARTITION({spark.sparkContext.defaultParallelism}) */ "
+        if repartition
+        else ""
+    )
+    ctes = ", ".join(
+        f"{v} AS (SELECT {hint}* FROM {table_sql(sf_dir, v)})" for v in views
+    )
+    return spark.sql(f"WITH {ctes} SELECT * FROM ({spark_sql})")
 
 
 def _radius_oracle_sql() -> str:
@@ -1190,9 +1159,7 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("sig") == F.col("sig_b"))
         & (F.col("doc_a") < F.col("doc_b")),
     )
-    return _without_generate_filter_inference(
-        spark, pairs.select("doc_a", "doc_b").distinct()
-    )
+    return pairs.select("doc_a", "doc_b").distinct()
 
 
 @register(
@@ -1772,7 +1739,6 @@ def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         _collocation_sql("spark"),
         repartition=True,
-        no_generate_filter_inference=True,
     )
 
 
@@ -1885,7 +1851,6 @@ def q_snapshot_drift_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         _drift_sql("spark"),
         repartition=True,
-        no_generate_filter_inference=True,
     )
 
 
@@ -2044,13 +2009,10 @@ def q_getis_ord_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
     res-4 lattice — local hot-spot z-scores complementing the global
     Moran's I (see _getis_tail_sql). Engine side reuses the
     localCheckpointed rollup (CTE-inlining discipline)."""
-    for v in ("documents",):
-        load_table(spark, sf_dir, v).repartition(
-            spark.sparkContext.defaultParallelism
-        ).createOrReplaceTempView(v)
-    cc = spark.sql(_morans_rollup_sql("spark")).localCheckpoint()
-    cc.createOrReplaceTempView("__getis_cc")
-    return spark.sql(_getis_tail_sql("__getis_cc", "spark"))
+    cc = _sql_query(
+        spark, sf_dir, _morans_rollup_sql("spark"), repartition=True
+    ).localCheckpoint()
+    return spark.sql(_getis_tail_sql("{cc}", "spark"), cc=cc)
 
 
 _DBSCAN_MINPTS = 2
@@ -2101,11 +2063,9 @@ def q_cell_dbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the identical edge set."""
     from geografir_spark.operators.dedup import connected_components
 
-    for v in ("documents",):
-        load_table(spark, sf_dir, v).repartition(
-            spark.sparkContext.defaultParallelism
-        ).createOrReplaceTempView(v)
-    cc = spark.sql(_morans_rollup_sql("spark")).localCheckpoint()
+    cc = _sql_query(
+        spark, sf_dir, _morans_rollup_sql("spark"), repartition=True
+    ).localCheckpoint()
     core = cells.apply_steps(
         cc.where(F.col("c") >= _DBSCAN_MINPTS),
         cells.compact_steps("pcell", "xi", "yi"),
@@ -2137,13 +2097,10 @@ def q_morans_i_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     with localCheckpoint before the tail: Spark inlines CTEs and the
     tail has 5 consumer paths, so the un-materialized plan recomputed
     the 600k-row geocode 5× (measured 17.8 s → 1 geocode pass)."""
-    for v in ("documents",):
-        load_table(spark, sf_dir, v).repartition(
-            spark.sparkContext.defaultParallelism
-        ).createOrReplaceTempView(v)
-    cc = spark.sql(_morans_rollup_sql("spark")).localCheckpoint()
-    cc.createOrReplaceTempView("__morans_cc")
-    return spark.sql(_morans_tail_sql("__morans_cc"))
+    cc = _sql_query(
+        spark, sf_dir, _morans_rollup_sql("spark"), repartition=True
+    ).localCheckpoint()
+    return spark.sql(_morans_tail_sql("{cc}"), cc=cc)
 
 
 @register("shipping_priority_topk", _SHIPPING_PRIORITY_SQL)
@@ -2185,7 +2142,6 @@ def q_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         _inc_minhash_sql("spark"),
         repartition=True,
-        no_generate_filter_inference=True,
     )
 
 
@@ -2362,11 +2318,10 @@ def q_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("fp") == F.col("__fpb"))
         & (F.col("doc_a") < F.col("doc_b")),
     )
-    return _without_generate_filter_inference(
-        spark,
+    return (
         pairs.groupBy("doc_a", "doc_b")
         .agg(F.countDistinct("fp").alias("n_shared"))
-        .filter(F.col("n_shared") >= 2),
+        .filter(F.col("n_shared") >= 2)
     )
 
 
@@ -2462,7 +2417,6 @@ def q_rare_ngram_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         _rare_ngram_sql("spark"),
         repartition=True,
-        no_generate_filter_inference=True,
     )
 
 
@@ -2594,7 +2548,6 @@ def q_rare_terms_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         _rare_terms_sql("spark"),
         repartition=True,
-        no_generate_filter_inference=True,
     )
 
 
@@ -2742,7 +2695,6 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         _bm25_sql("spark"),
         repartition=True,
-        no_generate_filter_inference=True,
     )
 
 
@@ -2834,20 +2786,13 @@ def q_hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     (measured 2.2 s vs 1.1 s at sf0.1; the DuckDB oracle keeps the
     single statement — it materializes CTEs)."""
     from geografir_spark.operators.ranking import bm25_sql
-    from geografir_spark.shipping import ensure_shipped
 
-    ensure_shipped(spark)
-    for v in ("documents", "embeddings"):
-        load_table(spark, sf_dir, v).repartition(
-            spark.sparkContext.defaultParallelism
-        ).createOrReplaceTempView(v)
     # materialize the two corpus-scanning legs once each (20 rows), then
-    # run the bounded rank+fusion tail over the checkpointed views
+    # run the bounded rank+fusion tail over the checkpointed frames
     bm = bm25_sql(
         "documents", "doc_id", "text", _BM25_TERMS, "spark", k=_HYBRID_N
     )
-    lex_top = _without_generate_filter_inference(spark, spark.sql(bm))
-    lex_top.localCheckpoint().createOrReplaceTempView("__lex_top")
+    lex_top = _sql_query(spark, sf_dir, bm, repartition=True).localCheckpoint()
     cos_sql = f"""
     WITH pv AS (SELECT embedding AS pvec FROM embeddings WHERE vec_id = 0),
          sem0 AS (SELECT vec_id AS doc_id, {_cos_expr('spark')} AS c
@@ -2855,16 +2800,18 @@ def q_hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
                         WHERE vec_id <> 0), pv)
     SELECT doc_id, c FROM sem0 ORDER BY c DESC, doc_id LIMIT {_HYBRID_N}
     """
-    spark.sql(cos_sql).localCheckpoint().createOrReplaceTempView("__sem_top")
+    sem_top = _sql_query(
+        spark, sf_dir, cos_sql, views=("embeddings",), repartition=True
+    ).localCheckpoint()
     return spark.sql(f"""
     WITH lex AS (SELECT a.doc_id, CAST(count(*) AS BIGINT) AS rnk
-                 FROM __lex_top a JOIN __lex_top b
+                 FROM {{lex_top}} a JOIN {{lex_top}} b
                    ON b.score_micro > a.score_micro
                       OR (b.score_micro = a.score_micro
                           AND b.doc_id <= a.doc_id)
                  GROUP BY a.doc_id),
          sem AS (SELECT a.doc_id, CAST(count(*) AS BIGINT) AS rnk
-                 FROM __sem_top a JOIN __sem_top b
+                 FROM {{sem_top}} a JOIN {{sem_top}} b
                    ON b.c > a.c OR (b.c = a.c AND b.doc_id <= a.doc_id)
                  GROUP BY a.doc_id),
          contrib AS (SELECT doc_id,
@@ -2880,7 +2827,7 @@ def q_hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(count(*) AS BIGINT) AS n_lists
     FROM contrib GROUP BY doc_id
     ORDER BY rrf_micro DESC, doc_id LIMIT 10
-    """)
+    """, lex_top=lex_top, sem_top=sem_top)
 
 
 def _lang_id_sql(dialect: str) -> str:
@@ -3197,30 +3144,26 @@ def q_nation_big_spenders(spark: SparkSession, sf_dir: str) -> DataFrame:
     no float ever touches the predicate. The Spark side states the
     CORRELATED scalar-subquery form and lets Catalyst decorrelate it into
     the aggregated joins the oracle writes explicitly."""
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders")
-    c.createOrReplaceTempView("__c")
-    o.createOrReplaceTempView("__o")
-    return spark.sql("""
+    return _sql_query(spark, sf_dir, """
         WITH oc AS (SELECT o_custkey,
                            CAST(round(o_totalprice * 100.0) AS BIGINT) AS cents
-                    FROM __o),
+                    FROM orders),
         t AS (SELECT o_custkey, sum(cents) AS total_cents
               FROM oc GROUP BY o_custkey)
         SELECT c.c_nationkey AS nation_key, count(*) AS n_big_spenders,
                CAST(sum(t.total_cents) AS BIGINT) AS cents_sum
-        FROM __c c JOIN t ON t.o_custkey = c.c_custkey
+        FROM customer c JOIN t ON t.o_custkey = c.c_custkey
         WHERE t.total_cents * (
             SELECT count(DISTINCT o2.o_custkey)
-            FROM __c c2 JOIN oc o2 ON o2.o_custkey = c2.c_custkey
+            FROM customer c2 JOIN oc o2 ON o2.o_custkey = c2.c_custkey
             WHERE c2.c_nationkey = c.c_nationkey
         ) > (
             SELECT sum(o2.cents)
-            FROM __c c2 JOIN oc o2 ON o2.o_custkey = c2.c_custkey
+            FROM customer c2 JOIN oc o2 ON o2.o_custkey = c2.c_custkey
             WHERE c2.c_nationkey = c.c_nationkey
         )
         GROUP BY c.c_nationkey
-    """)
+    """, views=("customer", "orders"))
 
 
 @register(
@@ -3364,7 +3307,6 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         _ngram_jaccard_spark_sql(),
         views=("documents",),
         repartition=True,
-        no_generate_filter_inference=True,
     )
 
 
@@ -3419,7 +3361,6 @@ def q_lsh_jaccard_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         _lsh_jaccard_refine_sql("spark"),
         repartition=True,
-        no_generate_filter_inference=True,
     )
 
 
@@ -3442,9 +3383,7 @@ def q_html_text_invariant(spark: SparkSession, sf_dir: str) -> DataFrame:
     column, decode text back through the Arrow kernel, count byte-level
     mismatches (must be 0) and total payload bytes per lang."""
     from geografir_spark.operators.multimodal import decode_text_from_html
-    from geografir_spark.shipping import ensure_shipped
 
-    ensure_shipped(spark)
     p = load_pages(spark, sf_dir).selectExpr(
         "page_id", "lang", "text",
         "CAST(concat('<html>', text, '</html>') AS BINARY) AS html",
@@ -3486,9 +3425,7 @@ def q_binary_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the same payload — n_bytes, the byte-value sum (histogram · weights
     ≡ Σ bytes), and the distinct-byte count are all exact integers."""
     from geografir_spark.operators.multimodal import extract_binary_features
-    from geografir_spark.shipping import ensure_shipped
 
-    ensure_shipped(spark)
     p = load_pages(spark, sf_dir).selectExpr(
         "page_id", "CAST(concat('<html>', text, '</html>') AS BINARY) AS payload"
     )
@@ -4414,7 +4351,6 @@ def q_segment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         dedup.segment_dedup_sql("documents", "doc_id", "text", "spark"),
         repartition=True,
-        no_generate_filter_inference=True,
     )
 
 
@@ -4579,7 +4515,6 @@ def q_decontaminate_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         _decontaminate_sql("spark"),
         repartition=True,
-        no_generate_filter_inference=True,
     )
 
 
@@ -4630,7 +4565,6 @@ def q_split_leakage_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         _leakage_audit_sql("spark"),
         repartition=True,
-        no_generate_filter_inference=True,
     )
 
 
@@ -5141,5 +5075,4 @@ def q_unigram_logprob_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     (see _unigram_logprob_sql)."""
     return _sql_query(
         spark, sf_dir, _unigram_logprob_sql("spark"), repartition=True,
-        no_generate_filter_inference=True,
     )

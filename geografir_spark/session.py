@@ -20,7 +20,6 @@ def default_parallelism() -> int:
 def get_spark(
     app_name: str = "geografir-spark",
     cores: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession tuned for this engine.
@@ -66,9 +65,20 @@ def get_spark(
         # codegen's 64 KB limit. Select key sets with a broadcast semi- or
         # anti-join instead (plans.lineage.pending_rows).
         .config("spark.sql.constraintPropagation.enabled", "false")
+        # same re-inlining hazard for generators: InferFiltersFromGenerate
+        # wraps every explode(e) in isnotnull(e) AND size(e) > 0, and filter
+        # pushdown substitutes the alias, so a computed gram/shingle array
+        # is evaluated three times per input row on the dominant scan.
+        # explode already skips null and empty arrays, so the filter never
+        # removes a row the generator would emit.
+        .config(
+            "spark.sql.optimizer.excludedRules",
+            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
+        )
         # NOTE: a 48g heap measured 7× SLOWER on allocation-heavy stages
         # (regexp geocode) than 16g — oversized G1 young gen + fresh-page
-        # zeroing. Don't raise this without re-running bench.py.
+        # zeroing. Don't raise this without re-running perfbench/
+        # (setup_s, peak_rss_mb).
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         # bucketed-table metadata (plans/layout.py) needs a metastore; keep

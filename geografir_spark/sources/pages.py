@@ -11,8 +11,10 @@ rebuild the identical table. The derivation preserves ``text`` byte-for-byte
 (the per-row invariant) and carries ``doc_id`` through as ``page_id`` — the
 integer seed for fallback geocoding.
 
-``load_table`` is the single scan entry point for all engine queries, so the
-parquet→Iceberg switch is one line here.
+``load_table`` (a DataFrame) and ``table_sql`` (the same scan as SQL
+relation text, for queries that bind their tables inside the statement
+instead of through session temp views) are the only places that name the
+scan format, so the parquet→Iceberg switch is two lines here.
 """
 
 from __future__ import annotations
@@ -47,6 +49,11 @@ def pages_select_sql(documents_rel: str = "documents") -> str:
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+def table_sql(sf_dir: str, name: str) -> str:
+    """``load_table``'s scan as a Spark SQL relation (``parquet.`path```)."""
+    return f"parquet.`{sf_dir}/{name}.parquet`"
 
 
 def load_pages(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -12,6 +12,6 @@ SF_DIR_MED = "/root/testdata/sf0.01"
 def spark():
     from geografir_spark.session import get_spark
 
-    s = get_spark("geografir-tests", cores=4, shuffle_partitions=8)
+    s = get_spark("geografir-tests", cores=4)
     yield s
     s.stop()

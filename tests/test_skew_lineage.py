@@ -228,6 +228,37 @@ def test_lineage_numeric_looking_batch_ids(spark, tmp_path, monkeypatch):
     assert lineage.verify_lineage(spark, out_dir).count() == 0
 
 
+def test_lineage_read_error_raises_instead_of_recommitting(spark, tmp_path, monkeypatch):
+    """Only a missing lineage path reads as "nothing committed". Any other
+    read error raises out of ``run_resumable`` before it writes: read as
+    empty, it would recommit every unit in a new batch."""
+    import glob
+
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from geografir_spark.plans import lineage
+
+    out_dir = str(tmp_path / "out")
+    df = spark.range(300).selectExpr("id % 3 AS part_key", "id AS value")
+    lineage.run_resumable(df, out_dir)
+    batches = glob.glob(f"{out_dir}/data/batch_id=*")
+    assert len(batches) == 1
+
+    real_parquet = DataFrameReader.parquet
+
+    def flaky_parquet(self, *paths, **options):
+        if any(str(p).endswith("/lineage") for p in paths):
+            raise OSError("listing failed")
+        return real_parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", flaky_parquet)
+    with pytest.raises(OSError, match="listing failed"):
+        lineage.run_resumable(df, out_dir)
+    monkeypatch.undo()
+    assert glob.glob(f"{out_dir}/data/batch_id=*") == batches
+    assert lineage.read_lineage(spark, out_dir).count() == 3
+
+
 @pytest.fixture()
 def units40_out(spark, tmp_path):
     """A fresh run over 40 units from a 4-partition frame."""
