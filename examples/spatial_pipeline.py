@@ -3,27 +3,32 @@
 way a production Common-Crawl tiling job runs them:
 
  1. ingest    pages → geocode → Morton cell (pure codegen SQL, no Python)
- 2. layout    write cell-range-clustered parquet + per-file cell-span
-              manifest (plans/layout.py — the file-pruning index)
- 3. prune     bbox query → cell ranges → manifest prunes the file list
-              before any footer is opened
+ 2. layout    commit cell-range-clustered parquet as one batch with a
+              pointer row per file carrying its cell span (plans/layout.py
+              — the file-pruning index)
+ 3. prune     bbox query → cell ranges → the pointer rows prune the file
+              list before any footer is opened
  4. join      PIP spatial join of the pruned points against polygon zones
               (cover cells + full-cell skip + exact even-odd refine)
  5. lineage   checkpointed write with per-partition lineage rows; a
               simulated crash resumes via anti-join without recomputing
               committed partitions
- 6. snapshot  metadata-only snapshot of the spatial table; OPTIMIZE
-              compaction afterwards (which invalidates older snapshots —
-              re-take them, as documented)
+ 6. snapshot  a snapshot (a commit time) of the spatial table; OPTIMIZE
+              compaction commits a new batch, the pre-optimize snapshot
+              still reads the same rows, then ``expire`` deletes the
+              superseded batch
 
 Run: python examples/spatial_pipeline.py [sf_dir]   (default sf0.001)
+The last stdout line is a JSON summary of the steps.
 """
 
 from __future__ import annotations
 
+import json
 import shutil
 import sys
 import tempfile
+import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
@@ -40,7 +45,7 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> None:
     from geografir_spark.session import get_spark
     from geografir_spark.shipping import ensure_shipped
 
-    spark = get_spark("spatial-pipeline", cores=8)
+    spark = get_spark("spatial-pipeline")
     ensure_shipped(spark)
     work = Path(tempfile.mkdtemp(prefix="spatial_pipeline_"))
     try:
@@ -58,13 +63,13 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> None:
         )
         n_pages = pts.count()
 
-        # 2. layout: range-clustered files + manifest
+        # 2. layout: range-clustered files + per-file pointer rows
         table = str(work / "points")
         layout.write_spatial(pts, table, cell_col="cell", n_ranges=8)
         sel, total = layout.pruned_file_count(
             spark, table, _bbox_ranges(cells, res, -60.0, -30.0, 60.0, 30.0)
         )
-        print(f"ingested {n_pages} pages; manifest prunes {total - sel}/{total} files")
+        print(f"ingested {n_pages} pages; pointer rows prune {total - sel}/{total} files")
 
         # 3+4. pruned scan → PIP join against zones
         ranges = _bbox_ranges(cells, res, -60.0, -30.0, 60.0, 30.0)
@@ -90,14 +95,22 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> None:
               f"skipped {r['skipped']} committed; "
               f"lineage rows: {lineage.read_lineage(spark, out).count()}")
 
-        # 6. snapshot + optimize
-        snap = str(work / "snap")
-        n_files = layout.snapshot_spatial(spark, table, snap)
+        # 6. snapshot, optimize, read the snapshot, expire
+        snap = layout.snapshot_spatial(spark, table)
         before, after = layout.optimize_spatial(
             spark, table, cell_col="cell", target_rows_per_file=n_pages
         )
-        print(f"snapshot referenced {n_files} files; OPTIMIZE {before}→{after} files"
-              " (older snapshots now stale — re-take after OPTIMIZE)")
+        snap_rows = layout.read_spatial(spark, table, as_of=snap).count()
+        expired = lineage.expire(spark, table, time.time())
+        print(f"OPTIMIZE {before}→{after} files; the pre-optimize snapshot still reads"
+              f" {snap_rows} rows; expire deleted {len(expired)} superseded batch(es)")
+        print(json.dumps({
+            "pages": n_pages, "files_total": total, "files_selected": sel,
+            "resume_processed": r["processed"], "resume_skipped": r["skipped"],
+            "output_rows": lineage.read_output(spark, out).count(),
+            "files_before": before, "files_after": after, "snapshot_rows": snap_rows,
+            "expired": len(expired), "rows_after_expire": layout.read_spatial(spark, table).count(),
+        }))
     finally:
         spark.stop()
         shutil.rmtree(work, ignore_errors=True)
@@ -108,7 +121,7 @@ def _bbox_ranges(cells, res: int, minx: float, miny: float, maxx: float, maxy: f
 
     cov = cells.cover_bbox_np(minx, miny, maxx, maxy, res)
     cov = np.sort(cov)
-    # collapse the cover into contiguous cell-id ranges for manifest pruning
+    # collapse the cover into contiguous cell-id ranges for file pruning
     ranges = []
     lo = prev = int(cov[0])
     for c in cov[1:]:

@@ -22,7 +22,9 @@ coalesced to a sentinel so NULL and empty-string rows hash apart.
 
 Reference parity note: the reference has no table/versioned-diff code
 (absent: no matching code under /root/reference/) — ENGINE operator in
-the lineage/layout family (plans/lineage.py, plans/layout.py snapshots).
+the lineage/layout family: it diffs two versions of a table, such as two
+commits of a spatial table read with ``plans/layout.py:read_spatial(...,
+as_of=)``.
 """
 
 from __future__ import annotations

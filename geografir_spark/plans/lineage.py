@@ -1,38 +1,47 @@
 """Checkpoint resumability with per-partition lineage (BASELINE.json
-north_rule: "resumable from checkpoint with per-partition lineage + metrics").
+north_rule: "resumable from checkpoint with per-partition lineage + metrics"),
+and the one commit protocol every table under ``plans/`` uses.
 
-Design (batch + snapshot manifests — no Structured Streaming needed; the
-reference's own download_directory documents non-transactional partial
-failure, object_storage/src/object_storage/object_store.py:215-221, which is
-precisely the failure mode this module closes):
+The protocol (no Structured Streaming needed; the reference's own
+download_directory documents non-transactional partial failure,
+object_storage/src/object_storage/object_store.py:215-221, which is
+precisely the failure mode it closes):
 
-- Work is partitioned by an integer **part key** (typically a coarse cell,
-  e.g. ``cell_parent(cell, 4)`` — spatially aligned so each unit is one
-  cell-range scan).
-- ``run_resumable`` reads the committed part keys from the lineage table
-  (small) and evaluates the pipeline at most twice per run:
+- A write lands as a new immutable batch, ``<root>/data/batch_id=<id>/``.
+  Nothing rewrites or renames a batch once it is written.
+- Only AFTER the data lands are pointer rows appended to the pointer log,
+  ``<root>/lineage/``, each naming its batch and carrying ``committed_ts``
+  (write-ahead-data, commit-by-pointer). A crash in between leaves a batch
+  no pointer names, which no reader returns.
+- The live rule (``live``): each key's latest commit as of a time. Readers
+  see only live pointers; a read "as of" an earlier commit time is a
+  snapshot, and it keeps reading for as long as its batches are kept.
+- ``expire`` deletes the batches no pointer live at or after a cut-off
+  names: superseded batches, and batches a crash left without pointers.
+
+Lineage outputs (``run_resumable``) key their pointers by an integer **part
+key** (typically a coarse cell, e.g. ``cell_parent(cell, 4)`` — spatially
+aligned so each unit is one cell-range scan). A run reads the committed
+part keys (small) and evaluates the pipeline at most twice:
   - one grouped job yields every planned part with its (n_rows, checksum);
     when every planned part is committed the run stops here;
   - one write lands the pending rows (the pipeline LEFT ANTI JOIN the
-    broadcast committed keys) as a new batch,
-    ``<out>/data/batch_id=<id>/part-*.parquet``: one file per writer, not
+    broadcast committed keys) as a new batch of one file per writer, not
     one directory per unit. The rows are clustered by unit first, so each
     unit is in one file written by one task, and up to one task per core
     writes. A unit much larger than the rest makes its task the longest.
-  Then one lineage row per pending unit is appended to ``<out>/lineage/``
-  with (part_key, n_rows, checksum, batch_id, committed_ts) — only AFTER
-  the data lands (write-ahead-data, commit-by-lineage). The lineage row is
-  the commit pointer: ``read_output`` returns, for each unit, only the
-  rows of the batch on its latest lineage row. A crash in between leaves
-  data without lineage, which ``read_output`` does not return,
-  ``verify_lineage`` flags, and the next run writes again in a new batch.
-  The superseded rows stay on disk, invisible; nothing removes them.
-- A unit's checksum = bit_xor of xxhash64 over its rows' columns —
-  order-insensitive, cheap, and comparable across reruns for integrity
-  verification (``verify_lineage``).
+  Then one pointer row per pending unit, (part_key, n_rows, checksum,
+  batch_id, committed_ts), is appended. ``read_output`` returns, for each
+  unit, only the rows of the batch on its live pointer; ``verify_lineage``
+  flags the rows of a unit that has no pointer, which the next run writes
+  again in a new batch. A unit's checksum = bit_xor of xxhash64 over its
+  rows' columns — order-insensitive, cheap, and comparable across reruns.
+Spatial tables (``plans/layout.py``) have one pointer per data file and no
+key: the whole table is one key, so its live pointers are every file of
+its latest commit.
 
-On Iceberg-enabled clusters a batch maps to a table append (a set of
-immutable files) + snapshot; the lineage table is identical. The parquet
+On Iceberg a batch is a table append and a commit a snapshot; the lineage
+table is identical (the mapping is in ``plans/layout.py``). The parquet
 layout here is the sandbox fallback behind the same API.
 """
 
@@ -51,17 +60,88 @@ LINEAGE_SCHEMA = (
 )
 
 
-def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The lineage table of ``out_dir``; empty when nothing was committed
-    yet. Only a missing path reads as empty: any other error raises, since
-    an empty lineage makes ``run_resumable`` recommit every unit."""
-    path = f"{out_dir}/lineage"
+def new_batch(root: str) -> tuple[str, str]:
+    """(batch_id, directory) for a new batch of ``root``."""
+    # The letter keeps the id a string when partition discovery reads the
+    # directory name back. An all-digit or "1e0..."-shaped hex id would be
+    # inferred as a number, and distinct ids can be equal numbers
+    # ("000000000001" and "1e0000000000" are both 1).
+    batch_id = "b" + uuid.uuid4().hex[:12]
+    return batch_id, f"{root}/data/batch_id={batch_id}"
+
+
+def read_pointers(spark: SparkSession, root: str, schema: str) -> DataFrame:
+    """The pointer log of ``root``; empty when nothing was committed yet.
+    Only a missing path reads as empty: any other error raises, since an
+    empty log makes ``run_resumable`` recommit every unit."""
     try:
-        return spark.read.schema(LINEAGE_SCHEMA).parquet(path)
+        return spark.read.schema(schema).parquet(f"{root}/lineage")
     except AnalysisException as e:
         if e.getCondition() != "PATH_NOT_FOUND":
             raise
-        return _local_frame(spark, [], LINEAGE_SCHEMA)
+        return _local_frame(spark, [], schema)
+
+
+def commit(spark: SparkSession, root: str, rows: list, schema: str) -> None:
+    """Append pointer rows to the pointer log of ``root``: the commit."""
+    _local_frame(spark, rows, schema).write.mode("append").parquet(f"{root}/lineage")
+
+
+def live(log: DataFrame, keys: list, as_of: float | None = None) -> DataFrame:
+    """The live rows of pointer log ``log``: each key's latest commit at or
+    before ``as_of`` (unbounded when None). With no ``keys`` the whole log
+    is one key, so the rows are every pointer of its latest commit."""
+    if as_of is not None:
+        log = log.filter(F.col("committed_ts") <= F.lit(as_of))
+    latest = log.groupBy(*keys).agg(F.max("committed_ts").alias("committed_ts"))
+    return log.join(F.broadcast(latest), [*keys, "committed_ts"], "left_semi")
+
+
+def expire(spark: SparkSession, root: str, older_than: float) -> list[str]:
+    """Delete every batch of ``root`` that no pointer live at or after
+    ``older_than`` (seconds since the epoch) names, through the Hadoop
+    FileSystem; returns the deleted batch ids.
+
+    A pointer is live at or after ``older_than`` when it is live as of
+    ``older_than`` or was committed later, so every snapshot from
+    ``older_than`` on keeps reading. A batch whose directory or any file in
+    it was modified at or after ``older_than`` is kept: it may be a write
+    whose pointers are not appended yet. Without pointer rows (a missing
+    or empty log) nothing is provably dead, and nothing is deleted."""
+    try:
+        log = spark.read.parquet(f"{root}/lineage")
+    except AnalysisException as e:
+        if e.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            raise
+        return []
+    # a spatial table's pointers carry no part key: the table is one key
+    keys = [c for c in ("part_key",) if c in log.columns]
+    named = live(log, keys, older_than).unionByName(log.filter(F.col("committed_ts") > older_than))
+    keep = {r.batch_id for r in named.select("batch_id").distinct().collect()}
+    if not keep:
+        return []
+    jvm = spark.sparkContext._jvm  # noqa: SLF001
+    data = jvm.org.apache.hadoop.fs.Path(f"{root}/data")
+    fs = data.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())  # noqa: SLF001
+    cutoff_ms = older_than * 1000
+    gone = []
+    for st in fs.listStatus(data):
+        name = st.getPath().getName()
+        batch_id = name.removeprefix("batch_id=")
+        if batch_id == name or batch_id in keep:
+            continue
+        young = st.getModificationTime() >= cutoff_ms
+        files = fs.listFiles(st.getPath(), True)
+        while not young and files.hasNext():
+            young = files.next().getModificationTime() >= cutoff_ms
+        if not young and fs.delete(st.getPath(), True):
+            gone.append(batch_id)
+    return gone
+
+
+def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
+    """The lineage table (pointer log) of ``out_dir``."""
+    return read_pointers(spark, out_dir, LINEAGE_SCHEMA)
 
 
 def _local_frame(spark: SparkSession, rows: list, schema: str) -> DataFrame:
@@ -127,11 +207,7 @@ def run_resumable(
     committed = {r.part_key for r in read_lineage(spark, out_dir).select("part_key").collect()}
     stats = _part_stats(df).collect()
     todo = sorted((r for r in stats if r.part_key not in committed), key=lambda r: r.part_key)
-    # The letter keeps the id a string when partition discovery reads the
-    # directory name back. An all-digit or "1e0..."-shaped hex id would be
-    # inferred as a number, and distinct ids can be equal numbers
-    # ("000000000001" and "1e0000000000" are both 1).
-    batch_id = "b" + uuid.uuid4().hex[:12]
+    batch_id, batch = new_batch(out_dir)
     result = {"processed": len(todo), "skipped": len(stats) - len(todo), "batch_id": batch_id}
     if not todo:
         return result
@@ -139,41 +215,28 @@ def run_resumable(
     # one task per core. The count must be explicit: AQE coalesces an
     # unnumbered repartition of small output back to a single task.
     writers = min(len(todo), spark.sparkContext.defaultParallelism)
-    pending_rows(df, committed).repartition(writers, "part_key").write.parquet(
-        f"{out_dir}/data/batch_id={batch_id}"
-    )
+    pending_rows(df, committed).repartition(writers, "part_key").write.parquet(batch)
     now = time.time()
     rows = [(r.part_key, r.n, r.ck, batch_id, now) for r in todo[:fail_after_parts]]
-    _local_frame(spark, rows, LINEAGE_SCHEMA).write.mode("append").parquet(f"{out_dir}/lineage")
+    commit(spark, out_dir, rows, LINEAGE_SCHEMA)
     if len(rows) < len(todo):
         raise RuntimeError(f"injected failure after {len(rows)} parts (batch {batch_id})")
     return result
 
 
-def _committed(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Each unit's latest lineage row: (part_key, batch_id, n_rows, checksum).
-
-    A unit can have several rows: a lineage directory that went missing
-    reads as no lineage, and the next run then commits its units again."""
-    latest = F.max_by(F.struct("batch_id", "n_rows", "checksum"), "committed_ts")
-    return read_lineage(spark, out_dir).groupBy("part_key").agg(latest.alias("c")).select(
-        "part_key", "c.*"
-    )
-
-
 def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
     """The committed rows: for each unit, the rows of the batch named by its
-    latest lineage row. Rows of a batch without lineage for the unit (a
-    crash between the data write and the lineage append, or a batch a
-    later run superseded) stay on disk and are not returned."""
-    live = _committed(spark, out_dir).select("part_key", "batch_id")
+    live lineage row. Rows of a batch without lineage for the unit (a crash
+    between the data write and the lineage append, or a batch a later run
+    superseded) are not returned; ``expire`` deletes such batches."""
+    units = live(read_lineage(spark, out_dir), ["part_key"]).select("part_key", "batch_id")
     data = spark.read.parquet(f"{out_dir}/data")
-    return data.join(F.broadcast(live), ["part_key", "batch_id"], "left_semi").drop("batch_id")
+    return data.join(F.broadcast(units), ["part_key", "batch_id"], "left_semi").drop("batch_id")
 
 
 def verify_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
     """Recompute (n_rows, checksum) per unit and batch from the data files
-    and diff against each unit's latest lineage row. Returns one row per
+    and diff against each unit's live lineage row. Returns one row per
     disagreement (empty == intact), with columns part_key, a_rows, a_ck,
     n_rows, checksum:
 
@@ -186,7 +249,9 @@ def verify_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
     the unit has a committed batch."""
     data = spark.read.parquet(f"{out_dir}/data")
     actual = _part_stats(data, ("part_key", "batch_id"), "a_rows", "a_ck")
-    j = actual.join(_committed(spark, out_dir), ["part_key", "batch_id"], "full_outer")
+    units = live(read_lineage(spark, out_dir), ["part_key"])
+    units = units.select("part_key", "batch_id", "n_rows", "checksum")
+    j = actual.join(units, ["part_key", "batch_id"], "full_outer")
     j = j.withColumn("unit_committed", F.count("n_rows").over(Window.partitionBy("part_key")) > 0)
     return j.filter(
         F.col("a_rows").isNull()

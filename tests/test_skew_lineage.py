@@ -187,17 +187,23 @@ def test_lineage_crash_window_flagged_then_healed(spark, tmp_path):
 
 def test_lineage_unit_committed_twice_read_once(spark, tmp_path):
     """A lost lineage listing makes the next run commit every unit again,
-    in a second batch. With both lineage files back, each unit has two
-    lineage rows; only its latest batch is read, and verify is clean."""
+    in a second batch. ``expire`` deletes nothing while the lineage is
+    missing. With both lineage files back, each unit has two lineage rows;
+    only its latest batch is read, and verify is clean, also after
+    ``expire`` deleted the superseded first batch."""
     import glob
     import os
+    import time
 
     from geografir_spark.plans import lineage
 
     out_dir = str(tmp_path / "out")
     df = spark.range(300).selectExpr("id % 3 AS part_key", "id AS value")
-    lineage.run_resumable(df, out_dir)
+    first = lineage.run_resumable(df, out_dir)["batch_id"]
     shutil.move(f"{out_dir}/lineage", str(tmp_path / "lineage1"))
+    time.sleep(0.01)
+    assert lineage.expire(spark, out_dir, time.time()) == []
+    assert os.listdir(f"{out_dir}/data") == [f"batch_id={first}"]
     r = lineage.run_resumable(df, out_dir)
     assert r["processed"] == 3 and r["skipped"] == 0
     for f in glob.glob(str(tmp_path / "lineage1" / "*.parquet")):
@@ -205,6 +211,42 @@ def test_lineage_unit_committed_twice_read_once(spark, tmp_path):
     assert lineage.read_lineage(spark, out_dir).count() == 6
     assert lineage.read_output(spark, out_dir).count() == 300
     assert lineage.verify_lineage(spark, out_dir).count() == 0
+    time.sleep(0.01)
+    assert lineage.expire(spark, out_dir, time.time()) == [first]
+    assert os.listdir(f"{out_dir}/data") == [f"batch_id={r['batch_id']}"]
+    assert lineage.read_output(spark, out_dir).count() == 300
+    assert lineage.verify_lineage(spark, out_dir).count() == 0
+
+
+def test_lineage_expire_deletes_crashed_batch_not_younger(spark, tmp_path):
+    """A run that crashed before its lineage append leaves a batch no
+    lineage row names, and ``verify_lineage`` flags its unit. ``expire``
+    keeps that batch while it is younger than the cut-off and keeps every
+    batch a live lineage row names; past it, the batch goes and verify is
+    clean. The resume then commits the unit."""
+    import os
+    import time
+
+    from geografir_spark.plans import lineage
+
+    out_dir = str(tmp_path / "out")
+    df = spark.range(300).selectExpr("id % 3 AS part_key", "id AS value")
+    kept = lineage.run_resumable(df.filter("part_key < 2"), out_dir)["batch_id"]
+    before_crash = time.time()
+    time.sleep(0.01)
+    with pytest.raises(RuntimeError, match="injected failure after 0 parts"):
+        lineage.run_resumable(df, out_dir, fail_after_parts=0)
+    assert [r.part_key for r in lineage.verify_lineage(spark, out_dir).collect()] == [2]
+    assert lineage.expire(spark, out_dir, before_crash) == []
+    assert len(os.listdir(f"{out_dir}/data")) == 2
+    time.sleep(0.01)
+    (crashed,) = lineage.expire(spark, out_dir, time.time())
+    assert crashed != kept
+    assert os.listdir(f"{out_dir}/data") == [f"batch_id={kept}"]
+    assert lineage.verify_lineage(spark, out_dir).count() == 0
+    assert lineage.read_output(spark, out_dir).count() == 200
+    assert lineage.run_resumable(df, out_dir)["processed"] == 1
+    assert lineage.read_output(spark, out_dir).count() == 300
 
 
 def test_lineage_numeric_looking_batch_ids(spark, tmp_path, monkeypatch):
@@ -339,7 +381,8 @@ def test_lineage_read_output_listing_sized_to_cores(spark, batches34_out):
 def test_salted_topk_equals_unsalted(spark, skewed_df):
     """The two-phase salted top-k (top-k per (cell, salt), then top-k of the
     survivors) must return EXACTLY the unsalted window result — the
-    correctness contract behind bench.py's skew measurement."""
+    correctness contract behind salting the hot cells that perfbench's
+    traced spatial_registry run reports as ``skew.max_reducer_rows``."""
     from pyspark.sql import Window as W
 
     from geografir_spark.operators.skew import salt_hot_cells
