@@ -306,11 +306,13 @@ def nested_sql(base_sql: str, steps: list[dict[str, str]]) -> str:
 # ---------------------------------------------------------------------------
 
 def apply_steps(df, steps: list[dict[str, str]]):
-    """Apply step dicts to a DataFrame via selectExpr; drop ``__`` temps."""
+    """Apply step dicts to a DataFrame; drop ``__`` temps. All steps go in
+    one selectExpr, where later steps read earlier ones as lateral column
+    aliases: the analyzer still plans one Project per step, but the
+    DataFrame is analyzed once instead of once per step."""
     temps = [name for st in steps for name in st if name.startswith("__")]
-    for st in steps:
-        df = df.selectExpr("*", *[f"{expr} AS {name}" for name, expr in st.items()])
-    return df.drop(*temps)
+    exprs = [f"{expr} AS {name}" for st in steps for name, expr in st.items()]
+    return df.selectExpr("*", *exprs).drop(*temps)
 
 
 def with_cell(df, lon_col: str, lat_col: str, res: int, out: str = "cell"):

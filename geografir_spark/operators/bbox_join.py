@@ -8,18 +8,14 @@ a distinct-shuffle by the classic reference-point rule: a pair is emitted
 only from the cell containing the overlap region's min corner (PBSM-style
 duplicate avoidance — cf. PAPERS.md partition-based spatial-merge join).
 
-Everything after the cover explode is native Catalyst (the dedup filter is
-the same shared bit-math fragment the cell index uses).
+Everything is native Catalyst: the cover explode, the join and the dedup
+filter (the same shared bit-math fragment the cell index uses).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from geografir_spark.geo import cells
 
@@ -33,31 +29,27 @@ def cover_bbox_cells(
     maxy: str = "maxy",
     out: str = "cell",
 ) -> DataFrame:
-    """Explode each row to its bbox's covering cells (adds ``out`` column)."""
-    schema = T.StructType(list(df.schema.fields) + [T.StructField(out, T.LongType())])
+    """Explode each row to its bbox's covering cells (adds ``out`` column):
+    the cells of ``cells.cover_bbox_np``, as native Generate/Project nodes.
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    Each axis explodes the inclusive range of its clamped axis indices and
+    the index pairs encode to cell ids. A row with a null bbox column, or
+    whose max index lies below its min index on either axis, gets no cells
+    (``axis_index_sql`` would map NULL to index 0); an inverted box whose
+    two ends share an index still gets that cell."""
 
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ax = pdf[minx].to_numpy()
-            ay = pdf[miny].to_numpy()
-            bx = pdf[maxx].to_numpy()
-            by = pdf[maxy].to_numpy()
-            covs = [
-                cells.cover_bbox_np(ax[i], ay[i], bx[i], by[i], res)
-                for i in range(len(pdf))
-            ]
-            counts = np.array([len(c) for c in covs], dtype=np.int64)
-            rep = pdf.iloc[np.repeat(np.arange(len(pdf)), counts)].reset_index(drop=True)
-            rep[out] = (
-                np.concatenate(covs) if covs else np.zeros(0, dtype=np.int64)
-            )
-            yield rep
+    def index_range(lo: str, hi: str, lat: bool) -> str:
+        a, b = (cells.axis_index_sql(f"`{c}`", res, lat=lat) for c in (lo, hi))
+        return (
+            f"explode(CASE WHEN `{lo}` IS NOT NULL AND `{hi}` IS NOT NULL AND {a} <= {b}"
+            f" THEN sequence({a}, {b}) END)"
+        )
 
-    return df.mapInPandas(gen, schema=schema)
+    grid = df.selectExpr("*", f"{index_range(minx, maxx, False)} AS __ix").selectExpr(
+        "*", f"{index_range(miny, maxy, True)} AS __iy"
+    )
+    covered = cells.apply_steps(grid, cells.encode_idx_steps("__ix", "__iy", res, out))
+    return covered.drop("__ix", "__iy")
 
 
 def bbox_overlap_join(

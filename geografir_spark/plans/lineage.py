@@ -72,14 +72,14 @@ def new_batch(root: str) -> tuple[str, str]:
 
 def read_pointers(spark: SparkSession, root: str, schema: str) -> DataFrame:
     """The pointer log of ``root``; empty when nothing was committed yet.
-    Only a missing path reads as empty: any other error raises, since an
-    empty log makes ``run_resumable`` recommit every unit."""
-    try:
-        return spark.read.schema(schema).parquet(f"{root}/lineage")
-    except AnalysisException as e:
-        if e.getCondition() != "PATH_NOT_FOUND":
-            raise
+    Only a missing path reads as empty, checked through the Hadoop
+    FileSystem so that Spark never lists a path that is not there: any
+    other error raises, since an empty log makes ``run_resumable``
+    recommit every unit."""
+    fs, log = _hadoop_path(spark, f"{root}/lineage")
+    if not fs.exists(log):
         return _local_frame(spark, [], schema)
+    return spark.read.schema(schema).parquet(f"{root}/lineage")
 
 
 def commit(spark: SparkSession, root: str, rows: list, schema: str) -> None:
@@ -120,9 +120,7 @@ def expire(spark: SparkSession, root: str, older_than: float) -> list[str]:
     keep = {r.batch_id for r in named.select("batch_id").distinct().collect()}
     if not keep:
         return []
-    jvm = spark.sparkContext._jvm  # noqa: SLF001
-    data = jvm.org.apache.hadoop.fs.Path(f"{root}/data")
-    fs = data.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())  # noqa: SLF001
+    fs, data = _hadoop_path(spark, f"{root}/data")
     cutoff_ms = older_than * 1000
     gone = []
     for st in fs.listStatus(data):
@@ -142,6 +140,12 @@ def expire(spark: SparkSession, root: str, older_than: float) -> list[str]:
 def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
     """The lineage table (pointer log) of ``out_dir``."""
     return read_pointers(spark, out_dir, LINEAGE_SCHEMA)
+
+
+def _hadoop_path(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Hadoop Path) of ``path``."""
+    p = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)  # noqa: SLF001
+    return p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), p  # noqa: SLF001
 
 
 def _local_frame(spark: SparkSession, rows: list, schema: str) -> DataFrame:

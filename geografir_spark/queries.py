@@ -269,9 +269,7 @@ def _points_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "pip_zone_counts",
-    f"""
+_PIP_ORACLE = f"""
     WITH zones AS ({_ZONES_SQL}), pts AS ({_POINTS_SQL})
     SELECT z.zone_id AS zone_id, count(*) AS n_points,
            CAST(sum(p.point_id) AS BIGINT) AS sum_ids
@@ -279,8 +277,10 @@ def _points_df(spark: SparkSession, sf_dir: str) -> DataFrame:
       ON p.lon >= z.minx AND p.lon <= z.maxx
      AND p.lat >= z.miny AND p.lat <= z.maxy
     GROUP BY z.zone_id
-    """,
-)
+    """
+
+
+@register("pip_zone_counts", _PIP_ORACLE)
 def q_pip_zone_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-in-polygon spatial join (cover cells → equi-join → full-cell
     skip + exact even-odd refine), aggregated per zone."""
@@ -294,18 +294,7 @@ def q_pip_zone_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PIP_COMPACT_ORACLE = f"""
-    WITH zones AS ({_ZONES_SQL}), pts AS ({_POINTS_SQL})
-    SELECT z.zone_id AS zone_id, count(*) AS n_points,
-           CAST(sum(p.point_id) AS BIGINT) AS sum_ids
-    FROM pts p JOIN zones z
-      ON p.lon >= z.minx AND p.lon <= z.maxx
-     AND p.lat >= z.miny AND p.lat <= z.maxy
-    GROUP BY z.zone_id
-    """
-
-
-@register("pip_zone_counts_compact", _PIP_COMPACT_ORACLE)
+@register("pip_zone_counts_compact", _PIP_ORACLE)
 def q_pip_zone_counts_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The multi-resolution PIP join (compacted full-cell cover, per-level
     parent equi-joins) against the SAME oracle as pip_zone_counts —
@@ -353,6 +342,16 @@ _L_WKT_SQL = (
     " CAST(x0 + 22.5 AS STRING), ' ', CAST(y0 + 11.25 AS STRING), ', ',"
     " CAST(x0 + 22.5 AS STRING), ' ', CAST(y0 + 22.5 AS STRING), ', ',"
     " CAST(x0 AS STRING), ' ', CAST(y0 + 22.5 AS STRING), ', ',"
+    " CAST(x0 AS STRING), ' ', CAST(y0 AS STRING), '))') AS geom_wkt"
+)
+
+# the triangle zone (x0, y0), (x0 + 28.125, y0 + 5.625), (x0 + 9.375,
+# y0 + 19.6875) as WKT, over the same x0/y0 columns
+_TRI_WKT_SQL = (
+    "concat('POLYGON ((',"
+    " CAST(x0 AS STRING), ' ', CAST(y0 AS STRING), ', ',"
+    " CAST(x0 + 28.125 AS STRING), ' ', CAST(y0 + 5.625 AS STRING), ', ',"
+    " CAST(x0 + 9.375 AS STRING), ' ', CAST(y0 + 19.6875 AS STRING), ', ',"
     " CAST(x0 AS STRING), ' ', CAST(y0 AS STRING), '))') AS geom_wkt"
 )
 
@@ -594,14 +593,7 @@ def q_zone_poly_intersections(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     zones = load_table(spark, sf_dir, "nation").selectExpr(
         "n_nationkey AS zone_id", f"{_TRI_X0} AS x0", f"{_TRI_Y0} AS y0"
-    ).selectExpr(
-        "zone_id",
-        "concat('POLYGON ((',"
-        " CAST(x0 AS STRING), ' ', CAST(y0 AS STRING), ', ',"
-        " CAST(x0 + 28.125 AS STRING), ' ', CAST(y0 + 5.625 AS STRING), ', ',"
-        " CAST(x0 + 9.375 AS STRING), ' ', CAST(y0 + 19.6875 AS STRING), ', ',"
-        " CAST(x0 AS STRING), ' ', CAST(y0 AS STRING), '))') AS geom_wkt",
-    )
+    ).selectExpr("zone_id", _TRI_WKT_SQL)
     return polygon_self_intersects_join(zones, res=ZONAL_RES)
 
 
@@ -692,6 +684,31 @@ _ZONAL_PY = (
 )
 
 
+def _mosaic(spark: SparkSession) -> DataFrame:
+    """The synthetic 6×6 tile mosaic (xi, yi ∈ [5, 10], one res-4 cell per
+    tile, 8×8 float64 pixels of _ZONAL_PIXEL_VALUE): the TILE_SCHEMA
+    columns plus the grid indices xi, yi."""
+    grid = (
+        spark.range(5, 11).selectExpr("id AS xi")
+        .crossJoin(spark.range(5, 11).selectExpr("id AS yi"))
+    )
+    return cells.apply_steps(grid, _ZONAL_CELL_STEPS).selectExpr(
+        "cell AS tile_id",
+        "cell",
+        "'EPSG:4326' AS crs",
+        "CAST(1 AS INT) AS count",
+        "CAST(8 AS INT) AS width",
+        "CAST(8 AS INT) AS height",
+        "'float64' AS dtype",
+        "CAST(-1.0 AS DOUBLE) AS nodata",
+        "array(2.8125, 0.0, -180.0 + xi * 22.5, 0.0, -1.40625,"
+        " (-90.0 + yi * 11.25) + 11.25) AS transform",
+        f"transform(sequence(0, 63), i -> {_ZONAL_PIXEL_VALUE}) AS pixels",
+        "xi",
+        "yi",
+    )
+
+
 @register(
     "zonal_stats",
     f"""
@@ -720,24 +737,7 @@ def q_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geografir_spark.operators.bbox_join import cover_bbox_cells
     from geografir_spark.raster.zonal import zonal_stats
 
-    grid = (
-        spark.range(5, 11).selectExpr("id AS xi")
-        .crossJoin(spark.range(5, 11).selectExpr("id AS yi"))
-    )
-    t = cells.apply_steps(grid, _ZONAL_CELL_STEPS)
-    tiles = t.selectExpr(
-        "cell AS tile_id",
-        "cell",
-        "'EPSG:4326' AS crs",
-        "CAST(1 AS INT) AS count",
-        "CAST(8 AS INT) AS width",
-        "CAST(8 AS INT) AS height",
-        "'float64' AS dtype",
-        "CAST(-1.0 AS DOUBLE) AS nodata",
-        "array(2.8125, 0.0, -180.0 + xi * 22.5, 0.0, -1.40625,"
-        " (-90.0 + yi * 11.25) + 11.25) AS transform",
-        f"transform(sequence(0, 63), i -> {_ZONAL_PIXEL_VALUE}) AS pixels",
-    )
+    tiles = _mosaic(spark).drop("xi", "yi")
     zones = _zones_df(spark, sf_dir).drop("geom_wkt")
     cover = cover_bbox_cells(zones, ZONAL_RES)
     return zonal_stats(tiles, cover)
@@ -778,15 +778,7 @@ def q_focal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixels only, everything integer-valued so the hash is exact."""
     from geografir_spark.raster.focal import focal_stats_tiles
 
-    grid = (
-        spark.range(5, 11).selectExpr("id AS xi")
-        .crossJoin(spark.range(5, 11).selectExpr("id AS yi"))
-    )
-    t = cells.apply_steps(grid, _ZONAL_CELL_STEPS)
-    tiles = t.selectExpr(
-        "cell", "xi", "yi",
-        f"transform(sequence(0, 63), i -> {_ZONAL_PIXEL_VALUE}) AS pixels",
-    )
+    tiles = _mosaic(spark).select("cell", "xi", "yi", "pixels")
     return focal_stats_tiles(tiles, nodata=-1.0, tile_px=8)
 
 
@@ -831,15 +823,7 @@ def q_slope_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join."""
     from geografir_spark.raster.focal import slope_stats_tiles
 
-    grid = (
-        spark.range(5, 11).selectExpr("id AS xi")
-        .crossJoin(spark.range(5, 11).selectExpr("id AS yi"))
-    )
-    t = cells.apply_steps(grid, _ZONAL_CELL_STEPS)
-    tiles = t.selectExpr(
-        "cell", "xi", "yi",
-        f"transform(sequence(0, 63), i -> {_ZONAL_PIXEL_VALUE}) AS pixels",
-    )
+    tiles = _mosaic(spark).select("cell", "xi", "yi", "pixels")
     return slope_stats_tiles(tiles, nodata=-1.0, tile_px=8)
 
 
@@ -882,15 +866,7 @@ def q_tile_pyramid(spark: SparkSession, sf_dir: str) -> DataFrame:
     assembly. The oracle pools the rebuilt global lattice directly."""
     from geografir_spark.raster.pyramid import pyramid_stats
 
-    grid = (
-        spark.range(5, 11).selectExpr("id AS xi")
-        .crossJoin(spark.range(5, 11).selectExpr("id AS yi"))
-    )
-    t = cells.apply_steps(grid, _ZONAL_CELL_STEPS)
-    tiles = t.selectExpr(
-        "cell", "xi", "yi",
-        f"transform(sequence(0, 63), i -> {_ZONAL_PIXEL_VALUE}) AS pixels",
-    )
+    tiles = _mosaic(spark).select("cell", "xi", "yi", "pixels")
     return pyramid_stats(tiles, res_child=ZONAL_RES)
 
 
@@ -947,34 +923,10 @@ def q_zonal_stats_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTE), so the match is bit-exact including boundary pixels."""
     from geografir_spark.raster.zonal import zonal_stats_polygon
 
-    grid = (
-        spark.range(5, 11).selectExpr("id AS xi")
-        .crossJoin(spark.range(5, 11).selectExpr("id AS yi"))
-    )
-    t = cells.apply_steps(grid, _ZONAL_CELL_STEPS)
-    tiles = t.selectExpr(
-        "cell AS tile_id",
-        "cell",
-        "'EPSG:4326' AS crs",
-        "CAST(1 AS INT) AS count",
-        "CAST(8 AS INT) AS width",
-        "CAST(8 AS INT) AS height",
-        "'float64' AS dtype",
-        "CAST(-1.0 AS DOUBLE) AS nodata",
-        "array(2.8125, 0.0, -180.0 + xi * 22.5, 0.0, -1.40625,"
-        " (-90.0 + yi * 11.25) + 11.25) AS transform",
-        f"transform(sequence(0, 63), i -> {_ZONAL_PIXEL_VALUE}) AS pixels",
-    )
+    tiles = _mosaic(spark).drop("xi", "yi")
     zones = load_table(spark, sf_dir, "nation").selectExpr(
         "n_nationkey AS zone_id", f"{_TRI_X0} AS x0", f"{_TRI_Y0} AS y0"
-    ).selectExpr(
-        "zone_id",
-        "concat('POLYGON ((',"
-        " CAST(x0 AS STRING), ' ', CAST(y0 AS STRING), ', ',"
-        " CAST(x0 + 28.125 AS STRING), ' ', CAST(y0 + 5.625 AS STRING), ', ',"
-        " CAST(x0 + 9.375 AS STRING), ' ', CAST(y0 + 19.6875 AS STRING), ', ',"
-        " CAST(x0 AS STRING), ' ', CAST(y0 AS STRING), '))') AS geom_wkt",
-    )
+    ).selectExpr("zone_id", _TRI_WKT_SQL)
     return zonal_stats_polygon(tiles, zones, res=ZONAL_RES)
 
 
@@ -1640,19 +1592,12 @@ def q_zone_buffer_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     checks the lattice algebra rather than replaying it. Scale shape:
     covers and dilations generate map-side (explode fan-out 9), the only
     shuffle is the per-zone DISTINCT."""
+    from geografir_spark.operators.bbox_join import cover_bbox_cells
+
     res = BBOX_RES
     n = 1 << res
-    zones = load_table(spark, sf_dir, "nation").selectExpr(
-        "n_nationkey AS zone_id",
-        f"{cells.axis_index_sql(ZONE_MINX, res, lat=False)} AS xlo",
-        f"{cells.axis_index_sql(ZONE_MAXX, res, lat=False)} AS xhi",
-        f"{cells.axis_index_sql(ZONE_MINY, res, lat=True)} AS ylo",
-        f"{cells.axis_index_sql(ZONE_MAXY, res, lat=True)} AS yhi",
-    )
-    cover = zones.selectExpr(
-        "zone_id", "ylo", "yhi", "explode(sequence(xlo, xhi)) AS ix"
-    ).selectExpr("zone_id", "ix", "explode(sequence(ylo, yhi)) AS iy")
-    covered = cells.apply_steps(cover, cells.encode_idx_steps("ix", "iy", res))
+    zones = _zones_df(spark, sf_dir).drop("geom_wkt")
+    covered = cover_bbox_cells(zones, res)
     # decode → dilate → clamp → re-encode: the real lattice round trip
     dec = cells.apply_steps(
         covered.select("zone_id", "cell"), cells.compact_steps("cell", "cx", "cy")

@@ -70,6 +70,49 @@ def halo_messages(tiles: DataFrame) -> DataFrame:
     )
 
 
+def _halo_stats(tiles: DataFrame, n: int, schema: str, stat) -> DataFrame:
+    """One row per tile: its ``cell`` followed by ``stat(padded)``, where
+    ``padded`` is the tile's (n+2)×(n+2) array: its own pixels framed by
+    its neighbors' halo strips, NaN where the mosaic has no neighbor.
+    ``schema`` names the output columns, ``cell`` first."""
+    msgs = halo_messages(tiles).groupBy("to_xi", "to_yi").agg(
+        F.collect_list(F.struct("sx", "sy", "vals")).alias("halos")
+    )
+    joined = tiles.join(
+        msgs,
+        (tiles["xi"] == msgs["to_xi"]) & (tiles["yi"] == msgs["to_yi"]),
+        "left",
+    ).select("cell", "pixels", "halos")
+    out_cols = [f.split()[0] for f in schema.split(",")]
+
+    def padded_array(pixels, halos) -> np.ndarray:
+        padded = np.full((n + 2, n + 2), np.nan)
+        padded[1 : n + 1, 1 : n + 1] = np.asarray(pixels, dtype=np.float64).reshape(n, n)
+        for h in halos if halos is not None else ():
+            sx, sy, vals = h["sx"], h["sy"], np.asarray(h["vals"], dtype=np.float64)
+            ri = 0 if sy == 1 else (n + 1 if sy == -1 else None)
+            ci = n + 1 if sx == 1 else (0 if sx == -1 else None)
+            if ri is not None and ci is not None:
+                padded[ri, ci] = vals[0]
+            elif ri is not None:
+                padded[ri, 1 : n + 1] = vals
+            else:
+                padded[1 : n + 1, ci] = vals
+        return padded
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            recs = [
+                (cell, *stat(padded_array(pixels, halos)))
+                for cell, pixels, halos in zip(pdf["cell"], pdf["pixels"], pdf["halos"])
+            ]
+            yield pd.DataFrame.from_records(recs, columns=out_cols)
+
+    return joined.mapInPandas(kernel, schema=schema)
+
+
 def focal_stats_tiles(
     tiles: DataFrame,
     *,
@@ -88,62 +131,26 @@ def focal_stats_tiles(
     kernel over (tile, halos) rows.
     """
     n = tile_px
-    msgs = halo_messages(tiles).groupBy("to_xi", "to_yi").agg(
-        F.collect_list(F.struct("sx", "sy", "vals")).alias("halos")
+
+    def focal_sum(padded):
+        nanmask = np.isnan(padded)
+        contrib = np.where(nanmask | (padded == nodata), 0.0, padded)
+        focal = np.zeros((n, n))
+        support = np.ones((n, n), dtype=bool)
+        for dr in range(3):
+            for dc in range(3):
+                focal += contrib[dr : dr + n, dc : dc + n]
+                support &= ~nanmask[dr : dr + n, dc : dc + n]
+        n_px = int(support.sum())
+        return (
+            n_px,
+            float(focal[support].sum()) if n_px else 0.0,
+            float(focal[support].max()) if n_px else None,
+        )
+
+    return _halo_stats(
+        tiles, n, "cell bigint, n_px bigint, sum_focal double, max_focal double", focal_sum
     )
-    joined = tiles.join(
-        msgs,
-        (tiles["xi"] == msgs["to_xi"]) & (tiles["yi"] == msgs["to_yi"]),
-        "left",
-    ).select("cell", "pixels", "halos")
-
-    schema = "cell bigint, n_px bigint, sum_focal double, max_focal double"
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            recs = []
-            for cell, pixels, halos in zip(pdf["cell"], pdf["pixels"], pdf["halos"]):
-                padded = np.full((n + 2, n + 2), np.nan)
-                padded[1 : n + 1, 1 : n + 1] = np.asarray(
-                    pixels, dtype=np.float64
-                ).reshape(n, n)
-                if halos is not None:
-                    for h in halos:
-                        sx, sy, vals = h["sx"], h["sy"], np.asarray(
-                            h["vals"], dtype=np.float64
-                        )
-                        ri = 0 if sy == 1 else (n + 1 if sy == -1 else None)
-                        ci = n + 1 if sx == 1 else (0 if sx == -1 else None)
-                        if ri is not None and ci is not None:
-                            padded[ri, ci] = vals[0]
-                        elif ri is not None:
-                            padded[ri, 1 : n + 1] = vals
-                        else:
-                            padded[1 : n + 1, ci] = vals
-                nanmask = np.isnan(padded)
-                contrib = np.where(nanmask | (padded == nodata), 0.0, padded)
-                focal = np.zeros((n, n))
-                support = np.ones((n, n), dtype=bool)
-                for dr in range(3):
-                    for dc in range(3):
-                        focal += contrib[dr : dr + n, dc : dc + n]
-                        support &= ~nanmask[dr : dr + n, dc : dc + n]
-                n_px = int(support.sum())
-                recs.append(
-                    (
-                        cell,
-                        n_px,
-                        float(focal[support].sum()) if n_px else 0.0,
-                        float(focal[support].max()) if n_px else None,
-                    )
-                )
-            yield pd.DataFrame.from_records(
-                recs, columns=["cell", "n_px", "sum_focal", "max_focal"]
-            )
-
-    return joined.mapInPandas(kernel, schema=schema)
 
 
 # Horn 3×3 gradient kernels (row 0 = NORTH in the padded array).
@@ -177,63 +184,27 @@ def slope_stats_tiles(
     O(perimeter) halo shuffle + Arrow kernel shape as focal_stats_tiles.
     """
     n = tile_px
-    msgs = halo_messages(tiles).groupBy("to_xi", "to_yi").agg(
-        F.collect_list(F.struct("sx", "sy", "vals")).alias("halos")
+
+    def slope(padded):
+        bad = np.isnan(padded) | (padded == nodata)
+        vals9 = np.where(bad, 0.0, padded)
+        gx = np.zeros((n, n))
+        gy = np.zeros((n, n))
+        support = np.ones((n, n), dtype=bool)
+        for dr in range(3):
+            for dc in range(3):
+                w = vals9[dr : dr + n, dc : dc + n]
+                gx += _HORN_X[dr, dc] * w
+                gy += _HORN_Y[dr, dc] * w
+                support &= ~bad[dr : dr + n, dc : dc + n]
+        slope2 = gx * gx + gy * gy  # integer-valued doubles < 2^53
+        n_px = int(support.sum())
+        return (
+            n_px,
+            int(slope2[support].sum()) if n_px else 0,
+            int(slope2[support].max()) if n_px else None,
+        )
+
+    return _halo_stats(
+        tiles, n, "cell bigint, n_px bigint, sum_slope2 bigint, max_slope2 bigint", slope
     )
-    joined = tiles.join(
-        msgs,
-        (tiles["xi"] == msgs["to_xi"]) & (tiles["yi"] == msgs["to_yi"]),
-        "left",
-    ).select("cell", "pixels", "halos")
-
-    schema = "cell bigint, n_px bigint, sum_slope2 bigint, max_slope2 bigint"
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            recs = []
-            for cell, pixels, halos in zip(pdf["cell"], pdf["pixels"], pdf["halos"]):
-                padded = np.full((n + 2, n + 2), np.nan)
-                padded[1 : n + 1, 1 : n + 1] = np.asarray(
-                    pixels, dtype=np.float64
-                ).reshape(n, n)
-                if halos is not None:
-                    for h in halos:
-                        sx, sy, vals = h["sx"], h["sy"], np.asarray(
-                            h["vals"], dtype=np.float64
-                        )
-                        ri = 0 if sy == 1 else (n + 1 if sy == -1 else None)
-                        ci = n + 1 if sx == 1 else (0 if sx == -1 else None)
-                        if ri is not None and ci is not None:
-                            padded[ri, ci] = vals[0]
-                        elif ri is not None:
-                            padded[ri, 1 : n + 1] = vals
-                        else:
-                            padded[1 : n + 1, ci] = vals
-                bad = np.isnan(padded) | (padded == nodata)
-                vals9 = np.where(bad, 0.0, padded)
-                gx = np.zeros((n, n))
-                gy = np.zeros((n, n))
-                support = np.ones((n, n), dtype=bool)
-                for dr in range(3):
-                    for dc in range(3):
-                        w = vals9[dr : dr + n, dc : dc + n]
-                        gx += _HORN_X[dr, dc] * w
-                        gy += _HORN_Y[dr, dc] * w
-                        support &= ~bad[dr : dr + n, dc : dc + n]
-                slope2 = gx * gx + gy * gy  # integer-valued doubles < 2^53
-                n_px = int(support.sum())
-                recs.append(
-                    (
-                        cell,
-                        n_px,
-                        int(slope2[support].sum()) if n_px else 0,
-                        int(slope2[support].max()) if n_px else None,
-                    )
-                )
-            yield pd.DataFrame.from_records(
-                recs, columns=["cell", "n_px", "sum_slope2", "max_slope2"]
-            )
-
-    return joined.mapInPandas(kernel, schema=schema)

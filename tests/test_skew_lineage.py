@@ -301,6 +301,31 @@ def test_lineage_read_error_raises_instead_of_recommitting(spark, tmp_path, monk
     assert lineage.read_lineage(spark, out_dir).count() == 3
 
 
+def test_fresh_run_never_reads_a_missing_lineage_path(spark, tmp_path, monkeypatch):
+    """A first run finds no pointer log without asking Spark to read it,
+    so Spark logs no FileNotFoundException for the missing path."""
+    import os
+
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from geografir_spark.plans import lineage
+
+    real_parquet = DataFrameReader.parquet
+    missing = []
+
+    def recording_parquet(self, *paths, **options):
+        missing.extend(str(p) for p in paths if not os.path.exists(str(p)))
+        return real_parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", recording_parquet)
+    out_dir = str(tmp_path / "out")
+    df = spark.range(300).selectExpr("id % 3 AS part_key", "id AS value")
+    r = lineage.run_resumable(df, out_dir)
+    assert r["processed"] == 3 and r["skipped"] == 0
+    assert lineage.read_lineage(spark, out_dir).count() == 3
+    assert missing == []
+
+
 @pytest.fixture()
 def units40_out(spark, tmp_path):
     """A fresh run over 40 units from a 4-partition frame."""
