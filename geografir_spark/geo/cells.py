@@ -430,8 +430,9 @@ def cover_bbox_np(minx: float, miny: float, maxx: float, maxy: float, res: int) 
     n = 1 << res
     x0 = int(axis_index_np(minx, res, lat=False))
     y0 = int(axis_index_np(miny, res, lat=True))
-    # right/top edges: a max coordinate exactly on a cell boundary should not
-    # pull in the next cell; nudge by subtracting one ulp of the grid step.
+    # right/top edges are inclusive: a max coordinate exactly on a cell
+    # boundary indexes the next cell up, and the cover includes that cell
+    # (there is no nudge back below the boundary).
     x1 = int(min(axis_index_np(maxx, res, lat=False), n - 1))
     y1 = int(min(axis_index_np(maxy, res, lat=True), n - 1))
     gx, gy = np.meshgrid(np.arange(x0, x1 + 1), np.arange(y0, y1 + 1))

@@ -2,7 +2,8 @@
 stages — never row-at-a-time Python).
 
 Lifts the reference's per-object operations to batch form:
-- ``points_in_polygon``  — exact PIP (even-odd ray cast), the refine half of
+- ``points_in_polygon``  — exact PIP (even-odd ray cast over
+  ``polygon_edges``); its SQL twin ``even_odd_sql`` is the refine half of
   the filter-refine spatial join (reference has no join; the exact-test
   contract is the engine requirement from BASELINE.json north_star:
   "broadcast/partitioned point-in-polygon joins with ... exact PIP test").
@@ -19,31 +20,52 @@ import numpy as np
 from geografir_spark.geo import cells, wkt
 
 
-def points_in_ring(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndarray:
-    """Crossing counts (mod 2) of a horizontal ray from each point through
-    one ring. Even-odd rule; boundary points are implementation-defined
-    (engine inputs are constructed off-boundary; see queries.py determinism
-    contract)."""
-    x0, y0 = ring[:-1, 0][:, None], ring[:-1, 1][:, None]
-    x1, y1 = ring[1:, 0][:, None], ring[1:, 1][:, None]
+def polygon_edges(geom) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """(x0, y0, x1, y1): every edge of every ring of a POLYGON/MULTIPOLYGON,
+    rings concatenated. The even-odd rule counts crossings over the union
+    of rings, so holes and parts need no separate bookkeeping."""
+    rings = wkt.polygon_rings(geom)
+    e = np.vstack([np.column_stack([r[:-1], r[1:]]) for r in rings])
+    return e[:, 0], e[:, 1], e[:, 2], e[:, 3]
+
+
+def even_odd_np(px, py, x0, y0, x1, y1) -> np.ndarray:
+    """numpy twin of even_odd_sql — identical operation order: a point is
+    inside when an odd number of edges cross the horizontal ray to its
+    right. O(edges × points)."""
+    px = np.asarray(px, dtype=np.float64)
+    py = np.asarray(py, dtype=np.float64)
+    x0, y0, x1, y1 = (np.asarray(a, dtype=np.float64)[:, None] for a in (x0, y0, x1, y1))
     crosses = (y0 > py) != (y1 > py)
     # guard the vertical interpolation against dy == 0 (no crossing there)
     dy = np.where(y1 - y0 == 0.0, 1.0, y1 - y0)
     xint = x0 + (py - y0) * (x1 - x0) / dy
-    return (crosses & (px < xint)).sum(axis=0)
+    return (crosses & (px < xint)).sum(axis=0) % 2 == 1
+
+
+def even_odd_sql(px: str, py: str, x0: str, y0: str, x1: str, y1: str) -> str:
+    """The even-odd crossing test as Spark SQL over four edge arrays (the
+    columns ``polygon_edges`` fills): the literal op order even_odd_np
+    mirrors, so both agree bit for bit, boundary points included. The
+    indexed ``filter`` walks the edges (an empty array counts 0), and the
+    CASE keeps ANSI mode from dividing by zero on horizontal edges."""
+    return (
+        f"size(filter({x0}, (__x, __i) ->"
+        f" (({y0}[__i] > {py}) != ({y1}[__i] > {py}))"
+        f" AND {px} < __x + ({py} - {y0}[__i]) * ({x1}[__i] - __x)"
+        f" / (CASE WHEN {y1}[__i] - {y0}[__i] = 0.0 THEN 1.0 ELSE {y1}[__i] - {y0}[__i] END)"
+        f")) % 2 = 1"
+    )
 
 
 def points_in_polygon(px, py, geom) -> np.ndarray:
     """Vectorized exact PIP for POLYGON/MULTIPOLYGON (even-odd over all
-    rings — holes subtract). O(edges × points) per batch; polygon edge
-    counts are small in this engine's workloads (zones), large polygons
-    should be pre-simplified or cell-decomposed upstream."""
-    px = np.asarray(px, dtype=np.float64)
-    py = np.asarray(py, dtype=np.float64)
-    total = np.zeros(len(px), dtype=np.int64)
-    for ring in wkt.polygon_rings(geom):
-        total += points_in_ring(px, py, ring)
-    return (total % 2) == 1
+    rings — holes subtract). Boundary points are implementation-defined
+    (engine inputs are constructed off-boundary; see queries.py
+    determinism contract). Polygon edge counts are small in this engine's
+    workloads (zones); large polygons should be pre-simplified or
+    cell-decomposed upstream."""
+    return even_odd_np(px, py, *polygon_edges(geom))
 
 
 def envelope(wkt_strs) -> np.ndarray:
@@ -85,8 +107,9 @@ def segments_intersect_rects(
     return overlap & ~same_side
 
 
-def cover_geometry(wkt_str: str, res: int) -> tuple[np.ndarray, np.ndarray]:
-    """Covering cells of a geometry at ``res`` → (cells, full_flags).
+def cover_geometry(geom, res: int) -> tuple[np.ndarray, np.ndarray]:
+    """Covering cells of a geometry (WKT or parsed) at ``res`` →
+    (cells, full_flags).
 
     full=True cells are entirely inside the geometry (join rows on them skip
     the exact PIP refine — the dominant case for large zones at scale).
@@ -103,7 +126,8 @@ def cover_geometry(wkt_str: str, res: int) -> tuple[np.ndarray, np.ndarray]:
     PIP passes; polygons with both huge edge counts and huge covers should
     be pre-simplified upstream (same contract as points_in_polygon).
     """
-    geom = wkt.parse_wkt(wkt_str)
+    if isinstance(geom, str):
+        geom = wkt.parse_wkt(geom)
     minx, miny, maxx, maxy = wkt.bounds(geom)
     cover = cells.cover_bbox_np(minx, miny, maxx, maxy, res)
     if len(cover) == 0:
@@ -117,13 +141,9 @@ def cover_geometry(wkt_str: str, res: int) -> tuple[np.ndarray, np.ndarray]:
         corners_in = np.ones(len(cover), dtype=bool)
         for cx, cy in ((cminx, cminy), (cminx, cmaxy), (cmaxx, cminy), (cmaxx, cmaxy)):
             corners_in &= points_in_polygon(cx, cy, geom)
-        crossed = np.zeros(len(cover), dtype=bool)
-        for ring in wkt.polygon_rings(geom):
-            ex0, ey0 = ring[:-1, 0], ring[:-1, 1]
-            ex1, ey1 = ring[1:, 0], ring[1:, 1]
-            crossed |= segments_intersect_rects(
-                ex0, ey0, ex1, ey1, cminx, cminy, cmaxx, cmaxy
-            ).any(axis=0)
+        crossed = segments_intersect_rects(
+            *polygon_edges(geom), cminx, cminy, cmaxx, cmaxy
+        ).any(axis=0)
         full = corners_in & ~crossed
         return cover, full
     return cover, np.zeros(len(cover), dtype=bool)

@@ -8,8 +8,9 @@ a distinct-shuffle by the classic reference-point rule: a pair is emitted
 only from the cell containing the overlap region's min corner (PBSM-style
 duplicate avoidance — cf. PAPERS.md partition-based spatial-merge join).
 
-Everything is native Catalyst: the cover explode, the join and the dedup
-filter (the same shared bit-math fragment the cell index uses).
+Everything is native Catalyst: the cover explode, the join on the
+integer axis indexes of the shared cell, and the dedup filter, which
+compares those indexes with the overlap's min-corner indexes.
 """
 
 from __future__ import annotations
@@ -18,6 +19,26 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from geografir_spark.geo import cells
+
+
+def _index_grid(df: DataFrame, res: int, minx: str, miny: str, maxx: str, maxy: str) -> DataFrame:
+    """Explode each row to the index pairs (``__ix``, ``__iy``) of its
+    bbox's covering cells: each axis explodes the inclusive range of its
+    clamped axis indices. A row with a null bbox column, or whose max
+    index lies below its min index on either axis, gets no cells
+    (``axis_index_sql`` would map NULL to index 0); an inverted box whose
+    two ends share an index still gets that cell."""
+
+    def index_range(lo: str, hi: str, lat: bool) -> str:
+        a, b = (cells.axis_index_sql(f"`{c}`", res, lat=lat) for c in (lo, hi))
+        return (
+            f"explode(CASE WHEN `{lo}` IS NOT NULL AND `{hi}` IS NOT NULL AND {a} <= {b}"
+            f" THEN sequence({a}, {b}) END)"
+        )
+
+    return df.selectExpr("*", f"{index_range(minx, maxx, False)} AS __ix").selectExpr(
+        "*", f"{index_range(miny, maxy, True)} AS __iy"
+    )
 
 
 def cover_bbox_cells(
@@ -30,24 +51,9 @@ def cover_bbox_cells(
     out: str = "cell",
 ) -> DataFrame:
     """Explode each row to its bbox's covering cells (adds ``out`` column):
-    the cells of ``cells.cover_bbox_np``, as native Generate/Project nodes.
-
-    Each axis explodes the inclusive range of its clamped axis indices and
-    the index pairs encode to cell ids. A row with a null bbox column, or
-    whose max index lies below its min index on either axis, gets no cells
-    (``axis_index_sql`` would map NULL to index 0); an inverted box whose
-    two ends share an index still gets that cell."""
-
-    def index_range(lo: str, hi: str, lat: bool) -> str:
-        a, b = (cells.axis_index_sql(f"`{c}`", res, lat=lat) for c in (lo, hi))
-        return (
-            f"explode(CASE WHEN `{lo}` IS NOT NULL AND `{hi}` IS NOT NULL AND {a} <= {b}"
-            f" THEN sequence({a}, {b}) END)"
-        )
-
-    grid = df.selectExpr("*", f"{index_range(minx, maxx, False)} AS __ix").selectExpr(
-        "*", f"{index_range(miny, maxy, True)} AS __iy"
-    )
+    the cells of ``cells.cover_bbox_np``, as native Generate/Project nodes
+    (the index pairs of ``_index_grid`` encoded to cell ids)."""
+    grid = _index_grid(df, res, minx, miny, maxx, maxy)
     covered = cells.apply_steps(grid, cells.encode_idx_steps("__ix", "__iy", res, out))
     return covered.drop("__ix", "__iy")
 
@@ -64,11 +70,17 @@ def bbox_overlap_join(
     reference-point rule. Both inputs need minx/miny/maxx/maxy columns; all
     columns are suffixed in the output."""
     sa, sb = suffixes
-    la = left.select([F.col(c).alias(c + sa) for c in left.columns])
-    rb = right.select([F.col(c).alias(c + sb) for c in right.columns])
-    ca = cover_bbox_cells(la, res, f"minx{sa}", f"miny{sa}", f"maxx{sa}", f"maxy{sa}")
-    cb = cover_bbox_cells(rb, res, f"minx{sb}", f"miny{sb}", f"maxx{sb}", f"maxy{sb}")
-    j = ca.join(cb, "cell").filter(
+
+    def side(df: DataFrame, s: str) -> DataFrame:
+        # columns suffixed, plus the axis indexes of the bbox's min corner
+        df = df.selectExpr(
+            *(f"`{c}` AS `{c}{s}`" for c in df.columns),
+            f"{cells.axis_index_sql('`minx`', res, lat=False)} AS __ix0{s}",
+            f"{cells.axis_index_sql('`miny`', res, lat=True)} AS __iy0{s}",
+        )
+        return _index_grid(df, res, f"minx{s}", f"miny{s}", f"maxx{s}", f"maxy{s}")
+
+    j = side(left, sa).join(side(right, sb), ["__ix", "__iy"]).filter(
         (F.col(f"minx{sa}") <= F.col(f"maxx{sb}"))
         & (F.col(f"minx{sb}") <= F.col(f"maxx{sa}"))
         & (F.col(f"miny{sa}") <= F.col(f"maxy{sb}"))
@@ -76,8 +88,11 @@ def bbox_overlap_join(
     )
     if extra_pred is not None:
         j = j.filter(extra_pred)
-    # reference point: min corner of the overlap region
-    rp_lon = f"greatest(minx{sa}, minx{sb})"
-    rp_lat = f"greatest(miny{sa}, miny{sb})"
-    j = cells.apply_steps(j, cells.encode_steps(rp_lon, rp_lat, res, "__rp_cell"))
-    return j.filter(F.col("__rp_cell") == F.col("cell")).drop("__rp_cell", "cell")
+    # reference point: the overlap region's min corner, (greatest(minx),
+    # greatest(miny)). axis_index_sql is monotone, so its cell's indexes
+    # are the greater of the two sides' min-corner indexes.
+    j = j.filter(
+        (F.col("__ix") == F.greatest(f"__ix0{sa}", f"__ix0{sb}"))
+        & (F.col("__iy") == F.greatest(f"__iy0{sa}", f"__iy0{sb}"))
+    )
+    return j.drop("__ix", "__iy", f"__ix0{sa}", f"__iy0{sa}", f"__ix0{sb}", f"__iy0{sb}")

@@ -344,13 +344,15 @@ def simhash_sql(rel: str, id_col: str, text_col: str, dialect: str) -> str:
     """
 
 
+# rounds between fixpoint checks (each check is one scalar collect)
+_CC_CHECK_EVERY = 2
+
+
 def connected_components(
     edges,
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 25,
-    check_every: int = 2,
-    shortcut: bool = True,
 ):
     """Connected components by hash-min label propagation WITH pointer
     doubling: every node's label converges to the MINIMUM node id
@@ -360,17 +362,17 @@ def connected_components(
     stage of cell-DBSCAN.
 
     Each round: label(v) ← min(label(v), min over neighbors' labels) (one
-    join + groupBy(min)), then — ``shortcut=True`` — the pointer-doubling
-    step label(v) ← min(label(v), label(label(v))) (labels ARE node ids,
-    so one self-join): propagation distance doubles per round, so
-    convergence is O(log diameter) instead of O(diameter). Near-dup
+    join + groupBy(min)), then the pointer-doubling step label(v) ←
+    min(label(v), label(label(v))) (labels ARE node ids, so one
+    self-join): propagation distance doubles per round, so convergence is
+    O(log diameter) instead of O(diameter). Near-dup
     clusters are shallow stars where this is moot, but LATTICE adjacency
     graphs snake — a 251-cell single component measured ~100 hash-min
     rounds (≈10 s of driver syncs) vs 8 doubled rounds (~1.5 s).
     ``localCheckpoint(eager=True)`` truncates the lineage so the plan
     stays O(1) per round (the knn ring-expansion pattern). The per-round
     driver sync (one scalar collect) is the dominant fixed cost at bench
-    scale, so the fixpoint is only CHECKED every ``check_every`` rounds:
+    scale, so the fixpoint is only CHECKED every second round:
     labels are monotone non-increasing, so an unchanged sum across ANY
     span of rounds is still exactly the fixpoint. Shuffle per round is
     O(|E| + |V|), hash-partitioned on node id.
@@ -407,20 +409,19 @@ def connected_components(
             .groupBy("id")
             .agg(F.min("label").alias("label"))
         )
-        if shortcut:
-            # pointer doubling: label(v) ← min(label(v), label(label(v))).
-            # Every label IS a node id (min over reachable ids), so the
-            # self-join matches every row; reachability is transitive, so
-            # the shortcut label stays in-component and ≥ the true min —
-            # monotonicity and the sum-fixpoint check are unaffected.
-            l2 = new.selectExpr("id AS l2id", "label AS l2label")
-            new = (
-                new.join(l2, new["label"] == l2["l2id"])
-                .select("id", F.least("label", "l2label").alias("label"))
-            )
+        # pointer doubling: label(v) ← min(label(v), label(label(v))).
+        # Every label IS a node id (min over reachable ids), so the
+        # self-join matches every row; reachability is transitive, so
+        # the shortcut label stays in-component and ≥ the true min —
+        # monotonicity and the sum-fixpoint check are unaffected.
+        l2 = new.selectExpr("id AS l2id", "label AS l2label")
+        new = (
+            new.join(l2, new["label"] == l2["l2id"])
+            .select("id", F.least("label", "l2label").alias("label"))
+        )
         new = new.localCheckpoint(eager=True)
         labels = new
-        if (i + 1) % check_every == 0 or i == max_iter - 1:
+        if (i + 1) % _CC_CHECK_EVERY == 0 or i == max_iter - 1:
             # labels only ever decrease, so an unchanged sum IS the fixpoint —
             # one tiny agg instead of a join+count per check
             cur_sum = new.agg(F.sum("label")).collect()[0][0]

@@ -4,19 +4,19 @@ Strategy (BASELINE.json north_star: "broadcast/partitioned point-in-polygon
 joins with ... exact PIP test"):
 
 1. **cover** — each polygon is decomposed into covering cells at ``res``
-   with a full/partial flag (mapInPandas UDTF; geo.kernels.cover_geometry).
+   with a full/partial flag, its bbox and its ring edges (mapInPandas UDTF
+   on the small side; geo.kernels.cover_geometry, one WKT parse per
+   polygon).
 2. **equi-join** — points (with a ``cell`` column from geo.cells.with_cell)
-   join the cover on the integer cell key. Small polygon sets are
-   broadcast; big ones flow through a regular shuffled hash/sort-merge join
-   on the same key — both sides are already partitioned by cell, which is
-   exactly the co-location the zonal/raster stages reuse.
-3. **refine** — rows in *full* cells are accepted without any Python;
-   rows in partial (boundary) cells pass the native bbox prefilter and
-   then the exact even-odd PIP test inside an Arrow-batched mapInPandas
-   kernel (one WKT parse per distinct polygon per batch).
+   join the broadcast cover on the integer cell key, once.
+3. **refine** — one native filter on the joined rows: a row in a *full*
+   cell is accepted as is; a row in a partial (boundary) cell must pass
+   the bbox prefilter and then the exact even-odd crossing test
+   (geo.kernels.even_odd_sql, a higher-order SQL expression over the edge
+   arrays). The point side never runs Python.
 
 At scale the full/partial split is the whole ballgame: interior cells of
-large polygons never touch Python, so the refine kernel sees only the
+large polygons never evaluate the crossing test, so it sees only the
 O(perimeter) boundary slice.
 """
 
@@ -24,6 +24,7 @@ from __future__ import annotations
 
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -31,12 +32,16 @@ from pyspark.sql import types as T
 
 from geografir_spark.geo import kernels
 
+EDGE_COLS = ("ex0", "ey0", "ex1", "ey1")
+
 
 def cover_cells(
     polys: DataFrame, wkt_col: str, res: int, *, compact: bool = False
 ) -> DataFrame:
     """Explode polygons into covering cells: all input columns +
-    (cell bigint, cell_full boolean, pminx..pmaxy double).
+    (cell bigint, cell_full boolean, pminx..pmaxy double, ex0, ey0, ex1,
+    ey1 array<double>). The ``ex*``/``ey*`` arrays are the polygon's ring
+    edges (geo.kernels.polygon_edges), repeated on every cover row.
 
     ``compact=True`` compacts the FULL subset of each polygon's cover into
     its minimal multi-resolution set (geo.cells.compact_np). This is exact:
@@ -54,36 +59,32 @@ def cover_cells(
             T.StructField("pmaxx", T.DoubleType()),
             T.StructField("pmaxy", T.DoubleType()),
         ]
+        + [T.StructField(c, T.ArrayType(T.DoubleType())) for c in EDGE_COLS]
     )
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from geografir_spark.geo import wkt as wktmod
+        from geografir_spark.geo.cells import compact_np
 
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
             parts = []
             for i in range(len(pdf)):
-                wkt_str = pdf[wkt_col].iloc[i]
-                cover, full = kernels.cover_geometry(wkt_str, res)
+                geom = wktmod.parse_wkt(pdf[wkt_col].iloc[i])
+                cover, full = kernels.cover_geometry(geom, res)
                 if len(cover) == 0:
                     continue
                 if compact and full.any():
-                    import numpy as np
-
-                    from geografir_spark.geo.cells import compact_np
-
                     cfull = compact_np(cover[full])
                     cover = np.concatenate([cfull, cover[~full]])
                     full = np.concatenate(
                         [np.ones(len(cfull), bool), np.zeros((~full).sum(), bool)]
                     )
-                bminx, bminy, bmaxx, bmaxy = wktmod.bounds(wktmod.parse_wkt(wkt_str))
                 rep = pdf.iloc[[i] * len(cover)].reset_index(drop=True)
                 rep["cell"] = cover
                 rep["cell_full"] = full
-                rep["pminx"], rep["pminy"] = bminx, bminy
-                rep["pmaxx"], rep["pmaxy"] = bmaxx, bmaxy
+                rep["pminx"], rep["pminy"], rep["pmaxx"], rep["pmaxy"] = wktmod.bounds(geom)
+                for c, e in zip(EDGE_COLS, kernels.polygon_edges(geom)):
+                    rep[c] = [e] * len(cover)
                 parts.append(rep)
             if parts:
                 yield pd.concat(parts, ignore_index=True)
@@ -100,7 +101,6 @@ def spatial_join_pip(
     lat: str = "lat",
     wkt_col: str = "geom_wkt",
     cell_col: str = "cell",
-    broadcast_polys: bool = True,
     compact_cover: bool = False,
 ) -> DataFrame:
     """Inner PIP join: result = points ⋈ polys where point ∈ polygon.
@@ -110,97 +110,54 @@ def spatial_join_pip(
     except the wkt/internal ones.
 
     ``compact_cover=True`` is the multi-resolution variant: the full-cell
-    half of each cover is compacted (exact — see cover_cells) and points
-    equi-join each resolution LEVEL present via the native parent bit-math
-    projection. Same rows out; the broadcast cover for a large zone drops
-    ~100× and the per-level joins are still plain int64 hash joins. The
-    distinct-level list is polygon-side metadata (≤ res+1 values,
-    collected once from the small side).
+    half of each cover is compacted (exact — see cover_cells), and each
+    point explodes to its ancestor cell at every level of the cover (the
+    compacted full-cell levels ∪ {res}; native parent bit math) before the
+    same single join. A polygon's compacted cover cells are disjoint, so a
+    point still meets each polygon at most once. Same rows out; the
+    broadcast cover for a large zone drops ~100×. The level list is
+    polygon-side metadata (≤ res+1 values, collected from the small side).
     """
     from geografir_spark.geo.cells import RES_BITS, RES_MASK
 
-    if compact_cover:
-        cov = cover_cells(polys, wkt_col, res, compact=True).withColumnRenamed(
-            "cell", "__poly_cell"
-        ).persist()
-    else:
-        cov = cover_cells(polys, wkt_col, res).withColumnRenamed("cell", "__poly_cell")
-    bcov = F.broadcast(cov) if broadcast_polys else cov
-
-    internal = ["__poly_cell", "cell_full", "pminx", "pminy", "pmaxx", "pmaxy", wkt_col]
-    out_cols = [c for c in points.columns] + [
-        c for c in polys.columns if c not in internal
-    ]
-
+    cov = cover_cells(polys, wkt_col, res, compact=compact_cover).withColumnRenamed(
+        "cell", "__poly_cell"
+    )
+    levels = [res]
     if compact_cover:
         levels = sorted(
-            r["r"]
-            for r in cov.filter(F.col("cell_full"))
-            .selectExpr(f"CAST(__poly_cell & {RES_MASK} AS INT) AS r")
-            .distinct()
-            .collect()
+            {res}
+            | {
+                r["r"]
+                for r in cov.filter(F.col("cell_full"))
+                .selectExpr(f"CAST(__poly_cell & {RES_MASK} AS INT) AS r")
+                .distinct()
+                .collect()
+            }
         )
-        if levels:
-            # ONE scan of the big side: explode each point to its ancestor
-            # cell at every level PRESENT in the compacted cover (variable-
-            # resolution parent is plain bit math), then one broadcast hash
-            # join. L-way row inflation is map-side and shuffle-free —
-            # strictly better at scale than L passes over the points table.
-            lvl_arr = ", ".join(str(r) for r in levels)
-            pts_x = points.selectExpr(
-                "*", f"explode(array({lvl_arr})) AS __lvl"
-            ).selectExpr(
-                "*",
-                f"((((({cell_col}) >> {RES_BITS}) >> (2 * ((({cell_col}) & {RES_MASK})"
-                f" - __lvl))) << {RES_BITS}) | __lvl) AS __pc",
-            )
-            cov_full = cov.filter(F.col("cell_full"))
-            if broadcast_polys:
-                cov_full = F.broadcast(cov_full)
-            full_rows = pts_x.join(
-                cov_full, on=pts_x["__pc"] == cov_full["__poly_cell"], how="inner"
-            ).select(*out_cols)
-        else:
-            full_rows = points.join(
-                bcov, on=points[cell_col] == cov["__poly_cell"], how="inner"
-            ).filter(F.lit(False)).select(*out_cols)
-        joined = points.join(
-            bcov, on=points[cell_col] == cov["__poly_cell"], how="inner"
+    pts, key = points, cell_col
+    if len(levels) > 1:
+        # one scan of the big side: L-way row inflation, map-side and
+        # shuffle-free (variable-resolution parent is plain bit math)
+        pts = points.selectExpr(
+            "*", f"explode(array({', '.join(map(str, levels))})) AS __lvl"
+        ).selectExpr(
+            "*",
+            f"((((({cell_col}) >> {RES_BITS}) >> (2 * ((({cell_col}) & {RES_MASK})"
+            f" - __lvl))) << {RES_BITS}) | __lvl) AS __pc",
         )
-    else:
-        joined = points.join(
-            bcov, on=points[cell_col] == cov["__poly_cell"], how="inner"
-        )
-        full_rows = joined.filter(F.col("cell_full")).select(*out_cols)
+        key = "__pc"
 
-    # boundary cells: native bbox prefilter, then exact PIP in Arrow batches
-    boundary = joined.filter(~F.col("cell_full")).filter(
+    inside = F.col("cell_full") | (
         (F.col(lon) >= F.col("pminx"))
         & (F.col(lon) <= F.col("pmaxx"))
         & (F.col(lat) >= F.col("pminy"))
         & (F.col(lat) <= F.col("pmaxy"))
+        & F.expr(kernels.even_odd_sql(f"`{lon}`", f"`{lat}`", *EDGE_COLS))
     )
-    bnd_schema = boundary.schema
-
-    def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from geografir_spark.geo import wkt as wktmod
-
-        cache: dict[str, object] = {}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            keep_parts = []
-            for wkt_str, grp in pdf.groupby(wkt_col, sort=False):
-                geom = cache.get(wkt_str)
-                if geom is None:
-                    geom = wktmod.parse_wkt(wkt_str)
-                    cache[wkt_str] = geom
-                inside = kernels.points_in_polygon(
-                    grp[lon].to_numpy(), grp[lat].to_numpy(), geom
-                )
-                keep_parts.append(grp[inside])
-            if keep_parts:
-                yield pd.concat(keep_parts, ignore_index=True)
-
-    refined = boundary.mapInPandas(refine, schema=bnd_schema).select(*out_cols)
-    return full_rows.unionByName(refined)
+    out_cols = points.columns + [c for c in polys.columns if c != wkt_col]
+    return (
+        pts.join(F.broadcast(cov), pts[key] == cov["__poly_cell"], "inner")
+        .filter(inside)
+        .select(*out_cols)
+    )

@@ -296,8 +296,8 @@ def q_pip_zone_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("pip_zone_counts_compact", _PIP_ORACLE)
 def q_pip_zone_counts_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The multi-resolution PIP join (compacted full-cell cover, per-level
-    parent equi-joins) against the SAME oracle as pip_zone_counts —
+    """The multi-resolution PIP join (compacted full-cell cover, points
+    exploded to their parent cell at each cover level) against the SAME oracle as pip_zone_counts —
     compaction is exact, so the driver's value hash must agree. At scale
     this variant broadcasts the minimal quadtree of each zone instead of
     its full-res interior."""
@@ -533,7 +533,7 @@ _TRI_Y0 = "(-33.75 + CAST(n_nationkey % 3 AS DOUBLE) * 11.25 + 2.8125)"
 # triangle V0=(x0,y0), V1=V0+(28.125,5.625), V2=V0+(9.375,19.6875) — every
 # coordinate is a dyadic rational, so engine and oracle doubles are
 # bit-identical; the PIP comparison uses the IDENTICAL IEEE expression as
-# geo.kernels.points_in_ring, so even boundary pixels agree exactly
+# geo.kernels.even_odd_np, so even boundary pixels agree exactly
 
 
 _POLY_EDGES_SQL = f"""

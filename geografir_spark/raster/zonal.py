@@ -148,24 +148,19 @@ def zonal_stats_polygon(
     partials keep the shuffle at O(pairs). Zones with no pixel inside are
     dropped."""
     from geografir_spark.geo import kernels as gk
-    from geografir_spark.geo import wkt as wktmod
-    from geografir_spark.operators.pip_join import cover_cells
+    from geografir_spark.operators.pip_join import EDGE_COLS, cover_cells
 
     zc = cover_cells(zones, wkt_col, res).select(
         F.col(zone_id).alias("__zid"),
-        F.col(wkt_col).alias("__zwkt"),
         F.col("cell").alias("__zcell"),
         F.col("cell_full").alias("__zfull"),
+        *EDGE_COLS,
     )
-    geom_cache: dict = {}  # WKT -> parsed geometry, per Python task
 
     def inside(col, i, gx, gy):
         if col["__zfull"][i]:
             return np.ones(gx.shape, dtype=bool)
-        wkt_str = col["__zwkt"][i]
-        geom = geom_cache.get(wkt_str)
-        if geom is None:
-            geom = geom_cache[wkt_str] = wktmod.parse_wkt(wkt_str)
-        return gk.points_in_polygon(gx.ravel(), gy.ravel(), geom).reshape(gx.shape)
+        edges = (col[c][i] for c in EDGE_COLS)
+        return gk.even_odd_np(gx.ravel(), gy.ravel(), *edges).reshape(gx.shape)
 
     return _zonal(tiles, zc, inside, zone_id).filter(F.col("n_pixels") > 0)

@@ -86,6 +86,17 @@ def test_cover_plans_stay_native(spark):
     assert _plan(QUERIES["zonal_stats"].fn(spark, SF_DIR)).count("MapInPandas") == 1
 
 
+def test_bbox_join_condition_compares_indexes(spark):
+    """The reference-point dedup compares integer axis indexes: no grid
+    encode (FLOOR) is evaluated per candidate pair in the join."""
+    from geografir_spark.queries import QUERIES
+
+    plan = _plan(QUERIES["bbox_zone_pairs"].fn(spark, SF_DIR))
+    joins = [ln for ln in plan.splitlines() if "Join " in ln]
+    assert joins, plan
+    assert not any("FLOOR" in ln.upper() for ln in joins), joins
+
+
 @pytest.fixture(scope="module")
 def mosaic(spark):
     from geografir_spark.queries import _mosaic
