@@ -116,130 +116,133 @@ def knn_join(
         )
         .withColumnRenamed("cell", "__tcell")
         .persist()
-    )  # released via t.unpersist() before return
-    cw, ch = cells.cell_size(res)
-    gmin = min(cw, ch)
-    n_cells = 1 << res  # grid side length: radius >= n_cells covers it all
+    )  # released in the finally below
+    try:
+        cw, ch = cells.cell_size(res)
+        gmin = min(cw, ch)
+        n_cells = 1 << res  # grid side length: radius >= n_cells covers it all
 
-    # start radius (module docstring point 2). A parent cell holding c
-    # targets has density c / (width² · cw · ch); the circle π(r·gmin)²
-    # holds START_FACTOR·k of them once r² · c ≥ r2c.
-    pres = max(res - PARENT_LEVELS, 0)
-    width = 1 << (res - pres)  # parent cell's side, in cells
-    r2c = START_FACTOR * k * width * width * cw * ch / (math.pi * gmin * gmin)
-    # at most min(4^pres, |targets|) rows: one per non-empty parent cell
-    density = t.groupBy(
-        F.expr(cells.parent_sql("__tcell", pres)).alias("__pcell")
-    ).agg(F.count("*").alias("__pn"))
-    start = F.when(F.col("__pn").isNull(), F.lit(width)).otherwise(
-        F.greatest(F.lit(1), F.ceil(F.sqrt(F.lit(r2c) / F.col("__pn"))))
-    )
-    remaining = (
-        cells.with_parent(q, "cell", pres, "__pcell")
-        .join(F.broadcast(density), "__pcell", "left")
-        .select(*q.columns, F.least(start, F.lit(n_cells)).cast("long").alias("__r"))
-    )
-
-    r = F.col("__r")
-    fits = (r < n_cells) & ((2 * r + 1) * (2 * r + 1) <= max_disk_cells)
-
-    def disk_axis(c: str):
-        # the disk's grid indices along one axis, clipped at the world edge;
-        # NULL for a row with no ring round left, which explode_outer keeps
-        # as one empty-handed row
-        return F.when(
-            fits,
-            F.sequence(
-                F.greatest(F.col(c) - r, F.lit(0)),
-                F.least(F.col(c) + r, F.lit(n_cells - 1)),
-            ),
+        # start radius (module docstring point 2). A parent cell holding c
+        # targets has density c / (width² · cw · ch); the circle π(r·gmin)²
+        # holds START_FACTOR·k of them once r² · c ≥ r2c.
+        pres = max(res - PARENT_LEVELS, 0)
+        width = 1 << (res - pres)  # parent cell's side, in cells
+        r2c = START_FACTOR * k * width * width * cw * ch / (math.pi * gmin * gmin)
+        # at most min(4^pres, |targets|) rows: one per non-empty parent cell
+        density = t.groupBy(
+            F.expr(cells.parent_sql("__tcell", pres)).alias("__pcell")
+        ).agg(F.count("*").alias("__pn"))
+        start = F.when(F.col("__pn").isNull(), F.lit(width)).otherwise(
+            F.greatest(F.lit(1), F.ceil(F.sqrt(F.lit(r2c) / F.col("__pn"))))
+        )
+        remaining = (
+            cells.with_parent(q, "cell", pres, "__pcell")
+            .join(F.broadcast(density), "__pcell", "left")
+            .select(*q.columns, F.least(start, F.lit(n_cells)).cast("long").alias("__r"))
         )
 
-    dist_expr = f"((({qx}) - ({tx})) * (({qx}) - ({tx}))) + ((({qy}) - ({ty})) * (({qy}) - ({ty})))"
-    # nulls-last: a query whose disk holds no target carries one NULL-dist
-    # row from the left join, and it must never outrank a real candidate
-    w = Window.partitionBy(qid).orderBy(
-        F.col("dist").asc_nulls_last(), F.col(tid).asc()
-    )
-    wq = Window.partitionBy(qid)
-    out_cols = queries.columns + [tid, tx, ty, "dist", "rank"]
+        r = F.col("__r")
+        fits = (r < n_cells) & ((2 * r + 1) * (2 * r + 1) <= max_disk_cells)
 
-    def ranked(cand: DataFrame) -> DataFrame:
-        return (
-            cand.selectExpr("*", f"{dist_expr} AS dist")
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-        )
-
-    def ring_round(rem: DataFrame) -> DataFrame:
-        exp = cells.with_xy(rem, "cell", "ring_x", "ring_y")
-        exp = exp.withColumn("ring_x", F.explode_outer(disk_axis("ring_x")))
-        exp = exp.withColumn("ring_y", F.explode_outer(disk_axis("ring_y")))
-        exp = cells.apply_steps(
-            exp, cells.encode_idx_steps("ring_x", "ring_y", res, "ring_cell")
-        ).drop("ring_x", "ring_y")
-        cand = exp.join(t, F.col("ring_cell") == F.col("__tcell"), "left")
-        done = (F.count("__tcell").over(wq) == k) & (
-            F.max("dist").over(wq) <= (r * gmin) * (r * gmin)
-        )
-        return ranked(cand).select(*out_cols, "cell", "__r", done.alias("__done"))
-
-    def full_coverage(rem: DataFrame) -> DataFrame:
-        # terminal round: the candidate set is ALL targets for every
-        # remaining straggler (irreducible by geometry). Instead of
-        # exploding the whole 2^(2·res)-cell grid per straggler
-        # (quadratic in grid side — unaffordable past res ≈ 10, the r5
-        # self-review finding #3), replicate each straggler across
-        # ``coverage_buckets`` integer keys and key targets by
-        # hash(cell) mod buckets: still a hash equi-join (never a
-        # cross join, the r4 weak flag), shuffle volume |targets| +
-        # |stragglers|·buckets, per-reducer load balanced to
-        # |stragglers|·|targets|/buckets at ANY res.
-        n_skipped = rem.filter(r < n_cells).count()  # cheap: checkpointed
-        if n_skipped:
-            # The skip is NOT free — the terminal round scans
-            # |stragglers|×|targets| candidates — so it announces itself;
-            # a caller who set the budget low as a cluster guard still
-            # gets the signal (r5 review: never invert a safety knob
-            # silently).
-            warnings.warn(
-                f"knn_join: the next ring of {n_skipped} straggler queries "
-                f"would explode more than max_disk_cells={max_disk_cells} "
-                f"cells/query; skipping them straight to the bucketed "
-                f"full-coverage round, which scans every target for each "
-                f"straggler. Lower res or raise the budget if the ring "
-                f"path was intended.",
-                RuntimeWarning,
-                stacklevel=3,
+        def disk_axis(c: str):
+            # the disk's grid indices along one axis, clipped at the world edge;
+            # NULL for a row with no ring round left, which explode_outer keeps
+            # as one empty-handed row
+            return F.when(
+                fits,
+                F.sequence(
+                    F.greatest(F.col(c) - r, F.lit(0)),
+                    F.least(F.col(c) + r, F.lit(n_cells - 1)),
+                ),
             )
-        expb = rem.drop("__r").withColumn(
-            "__b", F.explode(F.sequence(F.lit(0), F.lit(coverage_buckets - 1)))
-        )
-        tb = t.withColumn(
-            "__b", F.pmod(F.xxhash64("__tcell"), F.lit(coverage_buckets)).cast("int")
-        )
-        cand = expb.join(tb, "__b").drop("__b")
-        return ranked(cand).select(*out_cols).localCheckpoint(eager=True)
 
-    finals: list[DataFrame] = []
-    while True:
-        top = ring_round(remaining).localCheckpoint(eager=True)
-        finals.append(top.filter("__done").select(*out_cols))
-        stragglers = top.filter(~F.col("__done") & (F.col("rank") == 1)).select(
-            *q.columns, F.least(r * 2, F.lit(n_cells)).alias("__r")
+        dist_expr = f"((({qx}) - ({tx})) * (({qx}) - ({tx}))) + ((({qy}) - ({ty})) * (({qy}) - ({ty})))"
+        # nulls-last: a query whose disk holds no target carries one NULL-dist
+        # row from the left join, and it must never outrank a real candidate
+        w = Window.partitionBy(qid).orderBy(
+            F.col("dist").asc_nulls_last(), F.col(tid).asc()
         )
-        if stragglers.isEmpty():
-            break
-        remaining = stragglers.localCheckpoint(eager=True)
-        if remaining.filter(fits).isEmpty():
-            finals.append(full_coverage(remaining))
-            break
+        wq = Window.partitionBy(qid)
+        out_cols = queries.columns + [tid, tx, ty, "dist", "rank"]
 
-    out = finals[0]
-    for f in finals[1:]:
-        out = out.unionByName(f)
-    # every round's output is eagerly localCheckpoint-materialized, so the
-    # cached target index is dead here — release it instead of leaking a
-    # full indexed copy of targets per call until LRU eviction (r5 review)
-    t.unpersist()
-    return out
+        def ranked(cand: DataFrame) -> DataFrame:
+            return (
+                cand.selectExpr("*", f"{dist_expr} AS dist")
+                .withColumn("rank", F.row_number().over(w))
+                .filter(F.col("rank") <= k)
+            )
+
+        def ring_round(rem: DataFrame) -> DataFrame:
+            exp = cells.with_xy(rem, "cell", "ring_x", "ring_y")
+            exp = exp.withColumn("ring_x", F.explode_outer(disk_axis("ring_x")))
+            exp = exp.withColumn("ring_y", F.explode_outer(disk_axis("ring_y")))
+            exp = cells.apply_steps(
+                exp, cells.encode_idx_steps("ring_x", "ring_y", res, "ring_cell")
+            ).drop("ring_x", "ring_y")
+            cand = exp.join(t, F.col("ring_cell") == F.col("__tcell"), "left")
+            done = (F.count("__tcell").over(wq) == k) & (
+                F.max("dist").over(wq) <= (r * gmin) * (r * gmin)
+            )
+            return ranked(cand).select(*out_cols, "cell", "__r", done.alias("__done"))
+
+        def full_coverage(rem: DataFrame) -> DataFrame:
+            # terminal round: the candidate set is ALL targets for every
+            # remaining straggler (irreducible by geometry). Instead of
+            # exploding the whole 2^(2·res)-cell grid per straggler
+            # (quadratic in grid side — unaffordable past res ≈ 10, the r5
+            # self-review finding #3), replicate each straggler across
+            # ``coverage_buckets`` integer keys and key targets by
+            # hash(cell) mod buckets: still a hash equi-join (never a
+            # cross join, the r4 weak flag), shuffle volume |targets| +
+            # |stragglers|·buckets, per-reducer load balanced to
+            # |stragglers|·|targets|/buckets at ANY res.
+            n_skipped = rem.filter(r < n_cells).count()  # cheap: checkpointed
+            if n_skipped:
+                # The skip is NOT free — the terminal round scans
+                # |stragglers|×|targets| candidates — so it announces itself;
+                # a caller who set the budget low as a cluster guard still
+                # gets the signal (r5 review: never invert a safety knob
+                # silently).
+                warnings.warn(
+                    f"knn_join: the next ring of {n_skipped} straggler queries "
+                    f"would explode more than max_disk_cells={max_disk_cells} "
+                    f"cells/query; skipping them straight to the bucketed "
+                    f"full-coverage round, which scans every target for each "
+                    f"straggler. Lower res or raise the budget if the ring "
+                    f"path was intended.",
+                    RuntimeWarning,
+                    stacklevel=3,
+                )
+            expb = rem.drop("__r").withColumn(
+                "__b", F.explode(F.sequence(F.lit(0), F.lit(coverage_buckets - 1)))
+            )
+            tb = t.withColumn(
+                "__b", F.pmod(F.xxhash64("__tcell"), F.lit(coverage_buckets)).cast("int")
+            )
+            cand = expb.join(tb, "__b").drop("__b")
+            return ranked(cand).select(*out_cols).localCheckpoint(eager=True)
+
+        finals: list[DataFrame] = []
+        while True:
+            top = ring_round(remaining).localCheckpoint(eager=True)
+            finals.append(top.filter("__done").select(*out_cols))
+            stragglers = top.filter(~F.col("__done") & (F.col("rank") == 1)).select(
+                *q.columns, F.least(r * 2, F.lit(n_cells)).alias("__r")
+            )
+            if stragglers.isEmpty():
+                break
+            remaining = stragglers.localCheckpoint(eager=True)
+            if remaining.filter(fits).isEmpty():
+                finals.append(full_coverage(remaining))
+                break
+
+        out = finals[0]
+        for f in finals[1:]:
+            out = out.unionByName(f)
+        return out
+    finally:
+        # every round's output is eagerly localCheckpoint-materialized, so
+        # the cached target index is dead here. Release it on every exit,
+        # a raised warning or failed round included, instead of leaking a
+        # full indexed copy of targets per call until LRU eviction
+        t.unpersist()

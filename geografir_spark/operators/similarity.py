@@ -430,10 +430,10 @@ def embedding_near_dup_pairs(
     C = train_centroids_np(X, n_blocks)
     n_blocks = len(C)
 
-    # persist: the assign matmul feeds BOTH the radii collect (driver
+    # checkpoint: the assign matmul feeds BOTH the radii collect (driver
     # metadata, n_blocks rows) and the routed join — without it the whole
     # stage recomputes for each (measured 2x on the end-to-end time)
-    assigned = _assign_blocks(base, "__vec", C).persist()
+    assigned = _assign_blocks(base, "__vec", C).localCheckpoint()
     # block metadata: angular radius per block (n_blocks rows — not data)
     radii_rows = (
         assigned.groupBy("__blk").agg(F.min("__csim").alias("min_cos")).collect()

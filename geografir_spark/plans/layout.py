@@ -1,31 +1,22 @@
-"""Physical data layout for spatial scans and co-located joins.
+"""Physical data layout for spatial scans: cell-range pointer rows
+("Global Range Encoding" pruning), a 100 TB-scale mechanism the sandbox's
+single-JVM tests still verify structurally.
 
-Two 100 TB-scale mechanisms the sandbox's single-JVM tests still verify
-structurally:
-
-1. **Cell-range pointer rows ("Global Range Encoding" pruning)** — a
-   spatial table is written range-partitioned and sorted by the Morton
-   ``cell`` key, so each parquet file covers one tight cell interval, and
-   commits through ``plans/lineage.py``'s protocol: each write is a new
-   immutable batch, committed by one pointer row per file, (batch_id,
-   file, cell_min, cell_max, n_rows, committed_ts). A spatial query
-   (bbox → cover cell ranges, `geo/cells.py`) prunes the *file list* with
-   an interval-overlap test on the live pointer rows before Spark ever
-   opens a footer. At a million files this moves pruning from per-file
-   footer reads to one pointer scan — the same trick Iceberg metadata and
-   the EDBT'18 Global-Range-Encoding paper use (see PAPERS.md); parquet
-   row-group min/max pruning still applies inside the surviving files.
-   A snapshot is a commit timestamp, and ``read_spatial(as_of=...)`` reads
-   the table as it was then: compaction writes a new batch and renames
-   nothing, so an earlier snapshot keeps reading until ``expire`` deletes
-   the batches no live pointer names.
-
-2. **Bucketed co-located joins** — persist both sides of a recurring join
-   `bucketBy(n, key)` so the join is shuffle-free (no Exchange in the
-   plan): the per-bucket layout *is* the shuffle, paid once at write time.
-   This is the batch analogue of co-partitioned streams; on a cluster the
-   bucket count is chosen once per table (≈ total data / 256 MB) and every
-   downstream cell join inherits it.
+A spatial table is written range-partitioned and sorted by the Morton
+``cell`` key, so each parquet file covers one tight cell interval, and
+commits through ``plans/lineage.py``'s protocol: each write is a new
+immutable batch, committed by one pointer row per file, (batch_id, file,
+cell_min, cell_max, n_rows, committed_ts). A spatial query (bbox → cover
+cell ranges, `geo/cells.py`) prunes the *file list* with an
+interval-overlap test on the live pointer rows before Spark ever opens a
+footer. At a million files this moves pruning from per-file footer reads
+to one pointer scan — the same trick Iceberg metadata and the EDBT'18
+Global-Range-Encoding paper use (see PAPERS.md); parquet row-group
+min/max pruning still applies inside the surviving files. A snapshot is a
+commit timestamp, and ``read_spatial(as_of=...)`` reads the table as it
+was then: compaction writes a new batch and renames nothing, so an earlier
+snapshot keeps reading until ``expire`` deletes the batches no live
+pointer names.
 
 On Iceberg (https://iceberg.apache.org/spec/#snapshots) the same calls map
 one to one: ``write_spatial`` is ``df.sortWithinPartitions(cell).writeTo(t)``
@@ -181,26 +172,3 @@ def optimize_spatial(
     write_spatial(read_spatial(spark, path, cell_col=cell_col), path, cell_col=cell_col, n_ranges=n)
     return len(before), len(_live_files(spark, path))
 
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    *,
-    n_buckets: int,
-    key: str,
-    path: "str | None" = None,
-) -> None:
-    """Persist ``df`` hash-bucketed (and per-bucket sorted) by ``key``.
-
-    Joins/aggregations between tables bucketed on the same key with the
-    same bucket count run without an Exchange — verified by plan assertion
-    in tests/test_layout.py."""
-    w = (
-        df.write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(n_buckets, key)
-        .sortBy(key)
-    )
-    if path is not None:
-        w = w.option("path", path)
-    w.saveAsTable(table)

@@ -1074,10 +1074,12 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-duplicate candidate pairs (16 hashes, 4 bands,
     3-word shingles) — the full shingle→minhash→band→bucket-join pipeline.
 
-    The signature stage is persisted before banding: each doc's signature
-    feeds 4 band rows on both join sides, and without materialization the
-    optimizer re-inlines the (md5-per-shingle × 16 hash) computation into
-    every consumer (measured 65 s → ~3 s at sf0.1)."""
+    The signature stage is localCheckpointed before banding: each doc's
+    signature feeds 4 band rows on both join sides, and without
+    materialization the optimizer re-inlines the (md5-per-shingle × 16
+    hash) computation into every consumer (measured 65 s → ~3 s at sf0.1).
+    A checkpoint is no ``CacheManager`` entry, so nothing outlives the
+    query."""
     from geografir_spark.geo import cells
     from geografir_spark.operators import dedup
 
@@ -1096,7 +1098,7 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sigs = cells.apply_steps(docs, sig_steps).select(
         "doc_id", *[f"band{b}" for b in range(4)]
-    ).persist()
+    ).localCheckpoint()
     band_rows = None
     for b in range(4):
         part = sigs.selectExpr(
@@ -2231,11 +2233,12 @@ def q_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles ~2/(w+1) of the shingle volume (the winnowing density bound)
     and the df-cap bounds every join bucket at 10 docs.
 
-    The fingerprint stage is PERSISTED before the explode: __fps references
-    __hs (md5 per shingle) five times and CollapseProject would otherwise
-    substitute the whole shingle-hash expression into each — the same
-    re-inlining blowup documented in BENCH.md finding #1 (measured 223 s
-    -> ~3 s at sf0.1; the minhash query needs the identical barrier)."""
+    The fingerprint stage is localCheckpointed before the explode: __fps
+    references __hs (md5 per shingle) five times and CollapseProject would
+    otherwise substitute the whole shingle-hash expression into each — the
+    same re-inlining blowup documented in BENCH.md finding #1 (measured
+    223 s -> ~3 s at sf0.1; the minhash query needs the identical
+    barrier)."""
     from geografir_spark.geo import cells
     from geografir_spark.operators import text as textops
 
@@ -2246,7 +2249,11 @@ def q_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     steps = textops.winnow_exprs("text", "spark")
     steps[-1] = {"fps": steps[-1]["__fps"]}
-    f = cells.apply_steps(docs, steps).select("doc_id", "source", "fps").persist()
+    f = (
+        cells.apply_steps(docs, steps)
+        .select("doc_id", "source", "fps")
+        .localCheckpoint()
+    )
     e = f.selectExpr("doc_id", "source", "explode(fps) AS fp")
     rare = (
         e.groupBy("source", "fp")

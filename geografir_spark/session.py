@@ -1,9 +1,11 @@
 """SparkSession factory with scale-oriented defaults.
 
 Local-mode settings mirror what we would set on a real cluster: AQE with
-skew-join splitting (the data-dependent half of our skew story lives in
-``operators.skew``), Arrow-batched pandas UDFs for every Python kernel, and
-shuffle partitions sized to cores rather than the 200 default.
+skew-join splitting, Arrow-batched pandas UDFs for every Python kernel, and
+shuffle partitions sized to cores rather than the 200 default. AQE's
+skew-join splitting is the only skew handling the session sets; no operator
+calls ``operators.skew``, and ROADMAP.md direction 6 (one density-aware
+partitioner for the cell joins) decides whether it stays.
 """
 
 from __future__ import annotations
@@ -81,10 +83,10 @@ def get_spark(
         # (setup_s, peak_rss_mb).
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
-        # bucketed-table metadata (plans/layout.py) needs a metastore; keep
-        # derby + warehouse out of the repo tree
+        # the first spark.sql over a parquet.`path` relation (every
+        # registry query's _sql_query) creates the warehouse directory,
+        # ./spark-warehouse by default, in the caller's working directory
         .config("spark.sql.warehouse.dir", "/tmp/geografir_warehouse")
-        .config("spark.driver.extraJavaOptions", "-Dderby.system.home=/tmp/geografir_derby")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -116,6 +116,28 @@ def test_knn_disk_budget_skips_to_bucketed_coverage(spark):
     assert [r["tid"] for r in got] == [7, 8]  # exact nearest-first
 
 
+def test_knn_releases_target_index_when_a_round_raises(spark):
+    """A caller that turns warnings into errors gets the budget-skip
+    warning raised from inside the rounds; the persisted target index is
+    still released, so the session's cache is empty afterwards."""
+    import warnings
+
+    from geografir_spark.operators.knn import knn_join
+
+    qs = spark.createDataFrame(
+        [(1, -170.0, -80.0)], "qid bigint, qx double, qy double"
+    )
+    ts = spark.createDataFrame(
+        [(7, 150.0, 70.0), (8, 150.5, 70.0)], "tid bigint, tx double, ty double"
+    )
+    spark.catalog.clearCache()
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        with pytest.raises(RuntimeWarning, match="max_disk_cells"):
+            knn_join(qs, ts, k=2, res=6, max_disk_cells=1000)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_dedup_on_empty_documents(spark):
     from geografir_spark.operators import dedup
 

@@ -1,6 +1,5 @@
-"""Physical layout: manifest-pruned spatial scans and shuffle-free bucketed
-joins — the structural 100 TB mechanisms, verified by file counts and plan
-shape on small data."""
+"""Physical layout: manifest-pruned spatial scans — the structural 100 TB
+mechanism, verified by file counts on small data."""
 
 from __future__ import annotations
 
@@ -70,33 +69,6 @@ def test_spatial_manifest_prunes_files(spark, cell_df, tmp_path_factory):
     with pytest.raises(ValueError, match="no rows"):
         write_spatial(cell_df.limit(0), path)
     assert read_spatial(spark, path).count() == 4000
-
-
-def test_bucketed_join_has_no_shuffle(spark, cell_df, tmp_path_factory):
-    from geografir_spark.plans.layout import write_bucketed
-
-    base = tmp_path_factory.mktemp("buckets")
-    left = cell_df.withColumnRenamed("v", "lv")
-    right = cell_df.withColumnRenamed("v", "rv").withColumn(
-        "rv", F.col("rv") + 1
-    )
-    write_bucketed(left, "t_left", n_buckets=8, key="cell", path=str(base / "l"))
-    write_bucketed(right, "t_right", n_buckets=8, key="cell", path=str(base / "r"))
-    try:
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            j = spark.table("t_left").join(spark.table("t_right"), "cell")
-            plan = j._jdf.queryExecution().executedPlan().toString()
-            assert "Exchange" not in plan, f"bucketed join shuffled:\n{plan}"
-            # correctness: same result as the plain (shuffling) join
-            plain = left.join(right, "cell")
-            assert j.count() == plain.count()
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_left")
-        spark.sql("DROP TABLE IF EXISTS t_right")
 
 
 def test_snapshot_is_metadata_only_and_reads_back(spark, tmp_path):

@@ -99,10 +99,19 @@ def _all_query_names():
 
 @pytest.mark.parametrize("name", _all_query_names())
 def test_query_matches_oracle(spark, name):
+    """Also checks that the query leaves the session as it found it: no
+    cached frame in the ``CacheManager`` and no new catalog table, so a
+    caller's later plan never silently reads a query's leftovers."""
     from geografir_spark.queries import QUERIES, resolve_oracle
 
     q = QUERIES[name]
+    spark.catalog.clearCache()
+    tables = spark.catalog.listTables()
     _compare(name, q.fn(spark, SF_DIR), _duck(resolve_oracle(q)))
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), (
+        f"{name} left a cached frame on the session"
+    )
+    assert spark.catalog.listTables() == tables
 
 
 def test_entry_smoke(spark):

@@ -38,16 +38,6 @@ def test_pip_plan_is_one_join_and_one_point_scan(spark, name):
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
-def test_pip_join_leaves_no_persisted_rdd(spark):
-    from geografir_spark.queries import QUERIES
-
-    # a cache an earlier call of the same plan left would hide a new one
-    spark.catalog.clearCache()
-    before = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-    QUERIES["pip_zone_counts_compact"].fn(spark, SF_DIR).collect()
-    assert spark.sparkContext._jsc.sc().getPersistentRDDs().size() == before
-
-
 def _parity_polygons() -> list[str]:
     # the registry's concave L-zone and triangle of nation key 0
     # (queries._L_X0/_L_Y0 and _TRI_X0/_TRI_Y0 at n_nationkey = 0)

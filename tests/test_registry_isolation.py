@@ -1,6 +1,8 @@
 """Registry queries leave the caller's session as they found it: no temp
-view is registered or replaced and no SQL conf is toggled, so several
-callers can share one SparkSession."""
+view is registered or replaced, no SQL conf is toggled, and no frame is
+cached or catalog table written, so several callers can share one
+SparkSession. ``test_oracle_parity`` checks the cache and the catalog after
+every query."""
 
 from __future__ import annotations
 
@@ -11,7 +13,7 @@ from pathlib import Path
 
 from conftest import SF_DIR, SF_DIR_MED
 
-QUERIES_PY = Path(__file__).resolve().parent.parent / "geografir_spark" / "queries.py"
+PACKAGE = Path(__file__).resolve().parent.parent / "geografir_spark"
 
 
 def _rows(df) -> list:
@@ -88,24 +90,28 @@ def test_no_size_filter_inferred_under_generate(spark):
 
 
 def test_queries_module_touches_no_session_state():
-    """queries.py registers no temp view and sets no SQL conf."""
+    """No module of the package registers a temp view, writes a catalog
+    table, caches a frame or sets a SQL conf."""
     banned_attrs = {
         "createOrReplaceTempView",
         "createTempView",
         "createGlobalTempView",
         "createOrReplaceGlobalTempView",
         "registerTempTable",
+        "saveAsTable",
+        "cache",
     }
     hits = []
-    for node in ast.walk(ast.parse(QUERIES_PY.read_text())):
-        if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
-            continue
-        f = node.func
-        conf_call = (
-            f.attr in ("set", "unset")
-            and isinstance(f.value, ast.Attribute)
-            and f.value.attr == "conf"
-        )
-        if f.attr in banned_attrs or conf_call:
-            hits.append(f"line {node.lineno}: .{f.attr}")
+    for path in sorted(PACKAGE.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+                continue
+            f = node.func
+            conf_call = (
+                f.attr in ("set", "unset")
+                and isinstance(f.value, ast.Attribute)
+                and f.value.attr == "conf"
+            )
+            if f.attr in banned_attrs or conf_call:
+                hits.append(f"{path.relative_to(PACKAGE)}:{node.lineno}: .{f.attr}")
     assert not hits, hits
