@@ -23,7 +23,7 @@ from geografir_spark.geo.cells import (
     LON_SPAN,
     RES_BITS,
     RES_MASK,
-    _SPREAD_STEPS,
+    interleave_steps,
 )
 
 
@@ -51,22 +51,11 @@ def _axis_index_param(coord: str, *, lat: bool) -> str:
 
 
 def _cell_encode_body() -> str:
-    steps: list[dict[str, str]] = [
-        {
-            "__xi": _axis_index_param("lon", lat=False),
-            "__yi": _axis_index_param("lat", lat=True),
-        }
-    ]
-    px, py = "__xi", "__yi"
-    for i, (sh, mask) in enumerate(_SPREAD_STEPS):
-        steps.append(
-            {
-                f"__xs{i}": f"(({px} | ({px} << {sh})) & {mask})",
-                f"__ys{i}": f"(({py} | ({py} << {sh})) & {mask})",
-            }
-        )
-        px, py = f"__xs{i}", f"__ys{i}"
-    steps.append({"cell": f"((({px} | ({py} << 1)) << {RES_BITS}) | res)"})
+    steps = interleave_steps(
+        _axis_index_param("lon", lat=False),
+        _axis_index_param("lat", lat=True),
+        "res",
+    )
     return _fold(steps, "cell")
 
 

@@ -83,19 +83,16 @@ def axis_index_sql(coord_expr: str, res: int, *, lat: bool) -> str:
     )
 
 
-def encode_steps(lon_expr: str, lat_expr: str, res: int, out: str = "cell") -> list[dict[str, str]]:
-    """Step list computing ``out`` from lon/lat SQL expressions.
+def interleave_steps(xi: str, yi: str, res: "int | str", out: str = "cell") -> list[dict[str, str]]:
+    """Step list Morton-interleaving the integer grid indices ``xi``/``yi``
+    (SQL expressions) into the cell id ``out`` at resolution ``res`` — a
+    literal or a SQL expression (the ``res`` parameter of the
+    ``cell_encode`` SQL function).
 
     Each step is a {column_name: sql_expr} dict; expressions in step i may
     reference columns named in steps < i. Temp columns start with ``__``.
     """
-    _check_res(res)
-    steps: list[dict[str, str]] = [
-        {
-            "__xi": axis_index_sql(lon_expr, res, lat=False),
-            "__yi": axis_index_sql(lat_expr, res, lat=True),
-        }
-    ]
+    steps: list[dict[str, str]] = [{"__xi": xi, "__yi": yi}]
     px, py = "__xi", "__yi"
     for i, (sh, mask) in enumerate(_SPREAD_STEPS):
         steps.append(
@@ -107,26 +104,25 @@ def encode_steps(lon_expr: str, lat_expr: str, res: int, out: str = "cell") -> l
         px, py = f"__xs{i}", f"__ys{i}"
     steps.append({out: f"((({px} | ({py} << 1)) << {RES_BITS}) | {res})"})
     return steps
+
+
+def encode_steps(lon_expr: str, lat_expr: str, res: int, out: str = "cell") -> list[dict[str, str]]:
+    """Step list computing ``out`` from lon/lat SQL expressions."""
+    return interleave_steps(
+        axis_index_sql(lon_expr, res, lat=False),
+        axis_index_sql(lat_expr, res, lat=True),
+        res,
+        out,
+    )
 
 
 def encode_idx_steps(xi_expr: str, yi_expr: str, res: int, out: str = "cell") -> list[dict[str, str]]:
     """Like encode_steps but from integer grid indices (already in
     [0, 2^res)) instead of lon/lat."""
     _check_res(res)
-    steps: list[dict[str, str]] = [
-        {"__xi": f"CAST({xi_expr} AS BIGINT)", "__yi": f"CAST({yi_expr} AS BIGINT)"}
-    ]
-    px, py = "__xi", "__yi"
-    for i, (sh, mask) in enumerate(_SPREAD_STEPS):
-        steps.append(
-            {
-                f"__xs{i}": f"(({px} | ({px} << {sh})) & {mask})",
-                f"__ys{i}": f"(({py} | ({py} << {sh})) & {mask})",
-            }
-        )
-        px, py = f"__xs{i}", f"__ys{i}"
-    steps.append({out: f"((({px} | ({py} << 1)) << {RES_BITS}) | {res})"})
-    return steps
+    return interleave_steps(
+        f"CAST({xi_expr} AS BIGINT)", f"CAST({yi_expr} AS BIGINT)", res, out
+    )
 
 
 def compact_steps(cell_expr: str, out_x: str = "__cx", out_y: str = "__cy") -> list[dict[str, str]]:

@@ -20,6 +20,22 @@
 All return (probe_id, neighbor_id, rank) with rank by (cosine desc,
 neighbor_id) — integer outputs, so oracle hash-compare is immune to
 float-representation drift; ties are broken deterministically.
+
+Each piece is written once and shared:
+
+- ``cosine_sql`` is the one cosine expression (zero-norm guarded: a zero
+  vector reads 0.0 instead of dividing by zero); ``_cosine_topk_tail``
+  the one refine + rank window over candidate pairs, used by all three
+  top-k paths.
+- ``_train_sample`` is the one training sample, for ``ivf_topk``,
+  ``semantic_dedup`` and ``embedding_near_dup_pairs`` alike: the first
+  ``n`` rows in ``(hash60(id), id)`` order. hash60 is plain md5, so
+  ``queries._replayed_centroid_values`` replays the sample — and the
+  centroids trained on it — outside Spark.
+- ``with_ivf_lists`` is the one nearest-centroid assignment (with the
+  cosine to the chosen centroid on request).
+- ``_matrix`` decodes a vector column to a float64 matrix and
+  ``_unit_rows`` normalises its rows, for every numpy kernel here.
 """
 
 from __future__ import annotations
@@ -36,8 +52,47 @@ def _dot_expr(a: str, b: str) -> str:
     )
 
 
-def _norm_expr(a: str) -> str:
-    return f"sqrt({_dot_expr(a, a)})"
+def cosine_sql(a: str, b: str) -> str:
+    """Spark SQL cosine of two array columns; a zero-norm side reads 0.0."""
+    return (
+        f"({_dot_expr(a, b)})"
+        f" / (greatest(sqrt({_dot_expr(a, a)}) * sqrt({_dot_expr(b, b)}), 1e-300))"
+    )
+
+
+def _matrix(vecs) -> "np.ndarray":
+    """A column of vectors as one (N, dim) float64 matrix."""
+    return np.asarray([np.asarray(v, dtype=np.float64) for v in vecs], dtype=np.float64)
+
+
+def _unit_rows(X: "np.ndarray") -> "np.ndarray":
+    return X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-300)
+
+
+def _cosine_topk_tail(
+    cand: DataFrame, k: int, probe_id: str, target_id: str, probe_vec: str, target_vec: str
+) -> DataFrame:
+    """Exact cosine refine of candidate pairs, then per-probe top-k by
+    (cosine desc, target id)."""
+    cand = cand.selectExpr("*", f"{cosine_sql(probe_vec, target_vec)} AS __cos")
+    w = Window.partitionBy(probe_id).orderBy(F.desc("__cos"), F.asc(target_id))
+    return (
+        cand.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(probe_id, target_id, "rank")
+    )
+
+
+def _train_sample(df: DataFrame, id_col: str, vec_col: str, n: int) -> "np.ndarray":
+    """The first ``n`` vectors in (hash60(id), id) order, as a matrix
+    (TakeOrderedAndProject — a top-k, not a full sort)."""
+    from geografir_spark.operators.text import hash60_expr
+
+    h = hash60_expr(f"CAST({id_col} AS STRING)", "spark")
+    sample = (
+        df.select(id_col, vec_col).orderBy(F.expr(h), F.col(id_col)).limit(n).toPandas()
+    )
+    return _matrix(sample[vec_col])
 
 
 # cosine_topk broadcasts every probe vector to every task and scores it
@@ -73,25 +128,13 @@ def cosine_topk(
     j = F.broadcast(probes).crossJoin(targets)
     if exclude_self:
         j = j.filter(F.col(probe_id) != F.col(target_id))
-    j = j.selectExpr(
-        "*",
-        f"({_dot_expr(probe_vec, target_vec)})"
-        f" / (greatest({_norm_expr(probe_vec)} * {_norm_expr(target_vec)}, 1e-300)) AS __cos",
-    )
-    w = Window.partitionBy(probe_id).orderBy(F.desc("__cos"), F.asc(target_id))
-    return (
-        j.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(probe_id, target_id, "rank")
-    )
+    return _cosine_topk_tail(j, k, probe_id, target_id, probe_vec, target_vec)
 
 
 def hyperplanes(n_planes: int, dim: int) -> "np.ndarray":
     """Deterministic pseudo-random hyperplanes: coef(p, d) derived from
     md5('p<p>_d<d>') → [-1, 1). No stored model, reproducible anywhere."""
     import hashlib
-
-    import numpy as np
 
     out = np.empty((n_planes, dim), dtype=np.float64)
     for p in range(n_planes):
@@ -116,7 +159,6 @@ def with_lsh_buckets(
     Signatures for all tables come from ONE Arrow-batched matmul
     (X @ planes.T > 0 → packed bits) — the scale path; a per-term SQL
     expression tree was measured at ~2000 codegen terms per row side."""
-    import pandas as pd
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -130,10 +172,7 @@ def with_lsh_buckets(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            X = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]], dtype=np.float64
-            )
-            bits = (X @ planes.T >= 0).astype(np.int64) * weights  # (N, P*T)
+            bits = (_matrix(pdf[vec_col]) @ planes.T >= 0).astype(np.int64) * weights  # (N, P*T)
             buckets = bits.reshape(len(pdf), n_tables, n_planes).sum(axis=2)  # (N, T)
             rep = pdf.iloc[np.repeat(np.arange(len(pdf)), n_tables)].reset_index(drop=True)
             rep[table_col] = np.tile(np.arange(n_tables, dtype=np.int32), len(pdf))
@@ -181,17 +220,7 @@ def lsh_bucketed_topk(
         .select(probe_id, probe_vec, target_id, target_vec)
         .dropDuplicates([probe_id, target_id])
     )
-    cand = cand.selectExpr(
-        "*",
-        f"({_dot_expr(probe_vec, target_vec)})"
-        f" / (greatest({_norm_expr(probe_vec)} * {_norm_expr(target_vec)}, 1e-300)) AS __cos",
-    )
-    w = Window.partitionBy(probe_id).orderBy(F.desc("__cos"), F.asc(target_id))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(probe_id, target_id, "rank")
-    )
+    return _cosine_topk_tail(cand, k, probe_id, target_id, probe_vec, target_vec)
 
 
 def train_centroids_np(X: "np.ndarray", n_lists: int, n_iters: int = 8) -> "np.ndarray":
@@ -204,7 +233,7 @@ def train_centroids_np(X: "np.ndarray", n_lists: int, n_iters: int = 8) -> "np.n
     X = np.asarray(X, dtype=np.float64)
     if X.size == 0:
         raise ValueError("cannot train IVF centroids on an empty sample")
-    Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-300)
+    Xn = _unit_rows(X)
     n_lists = min(n_lists, len(Xn))
     idx = np.linspace(0, len(Xn) - 1, n_lists).astype(np.int64)
     C = Xn[idx].copy()
@@ -227,37 +256,37 @@ def with_ivf_lists(
     *,
     n_probes: int = 1,
     list_col: str = "ivf_list",
+    sim_col: "str | None" = None,
 ) -> DataFrame:
     """Assign each row its ``n_probes`` nearest inverted lists (one
     Arrow-batched matmul against the broadcast centroid matrix); rows are
-    exploded when n_probes > 1. Deterministic ties: argsort is stable."""
-    import pandas as pd
+    exploded when n_probes > 1. Deterministic ties: argsort is stable.
+    With ``sim_col``, each row also carries the cosine to its list's
+    centroid."""
     from pyspark.sql import types as T
 
-    schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(list_col, T.IntegerType())]
-    )
+    fields = [T.StructField(list_col, T.IntegerType())]
+    if sim_col:
+        fields.append(T.StructField(sim_col, T.DoubleType()))
+    schema = T.StructType(list(df.schema.fields) + fields)
     C = np.ascontiguousarray(centroids, dtype=np.float64)
 
     def gen(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            X = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]],
-                dtype=np.float64,
-            )
-            Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-300)
-            sims = Xn @ C.T  # (N, L)
+            sims = _unit_rows(_matrix(pdf[vec_col])) @ C.T  # (N, L)
             if n_probes == 1:
-                lists = np.argmax(sims, axis=1).astype(np.int32)[:, None]
+                lists = np.argmax(sims, axis=1)[:, None]
             else:
                 p = min(n_probes, sims.shape[1])
                 # stable top-p by (-sim, list_id): deterministic probe order
-                lists = np.argsort(-sims, axis=1, kind="stable")[:, :p].astype(np.int32)
+                lists = np.argsort(-sims, axis=1, kind="stable")[:, :p]
             p = lists.shape[1]
             rep = pdf.iloc[np.repeat(np.arange(len(pdf)), p)].reset_index(drop=True)
-            rep[list_col] = lists.ravel()
+            rep[list_col] = lists.ravel().astype(np.int32)
+            if sim_col:
+                rep[sim_col] = np.take_along_axis(sims, lists, axis=1).ravel()
             yield rep
 
     return df.mapInPandas(gen, schema=schema)
@@ -279,30 +308,15 @@ def ivf_topk(
     """Approximate top-k via IVF-Flat (coarse quantize → inverted-list
     equi-join → exact cosine refine → per-probe window top-k).
 
-    Training: ``train_sample`` vectors taken deterministically by
-    hash60(id) order (TakeOrderedAndProject — a top-k, not a full sort),
-    clustered on the driver. hash60 is the md5-derived cross-engine hash
-    (operators/text.py), so the sample — and therefore the centroid
-    matrix — is replicable OUTSIDE Spark: queries._ivf_oracle_sql replays
-    the sample + k-means in plain numpy and embeds the centroids as SQL
-    literals, making the whole approximate pipeline oracle-checkable.
-    At 100 TB the sample is still ~4k rows; the broadcast centroid matrix
-    is n_lists × dim doubles (a few hundred KB)."""
-    from pyspark.sql import functions as F
-
-    from geografir_spark.operators.text import hash60_expr
-
-    h = hash60_expr(f"CAST({target_id} AS STRING)", "spark")
-    sample = (
-        targets.select(target_id, target_vec)
-        .orderBy(F.expr(h), F.col(target_id))
-        .limit(train_sample)
-        .toPandas()
-    )
-    X = np.asarray(
-        [np.asarray(v, dtype=np.float64) for v in sample[target_vec]], dtype=np.float64
-    )
-    C = train_centroids_np(X, n_lists)
+    Training: ``train_sample`` target vectors in the shared
+    ``_train_sample`` order, clustered on the driver. The sample — and
+    therefore the centroid matrix — is replicable OUTSIDE Spark:
+    queries._ivf_oracle_sql replays the sample + k-means in plain numpy
+    and embeds the centroids as SQL literals, making the whole
+    approximate pipeline oracle-checkable. At 100 TB the sample is still
+    ~4k rows; the broadcast centroid matrix is n_lists × dim doubles (a
+    few hundred KB)."""
+    C = train_centroids_np(_train_sample(targets, target_id, target_vec, train_sample), n_lists)
 
     tl = with_ivf_lists(
         targets.select(target_id, target_vec), target_vec, C, n_probes=1,
@@ -314,54 +328,7 @@ def ivf_topk(
         .filter(F.col(probe_id) != F.col(target_id))
         .select(probe_id, probe_vec, target_id, target_vec)
     )
-    cand = cand.selectExpr(
-        "*",
-        f"({_dot_expr(probe_vec, target_vec)})"
-        f" / (greatest({_norm_expr(probe_vec)} * {_norm_expr(target_vec)}, 1e-300)) AS __cos",
-    )
-    w = Window.partitionBy(probe_id).orderBy(F.desc("__cos"), F.asc(target_id))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(probe_id, target_id, "rank")
-    )
-
-
-def _assign_blocks(
-    df: DataFrame,
-    vec_col: str,
-    centroids: "np.ndarray",
-    *,
-    blk_col: str = "__blk",
-    sim_col: str = "__csim",
-) -> DataFrame:
-    """Nearest-centroid block id + cosine-to-own-centroid per row (one
-    Arrow-batched matmul against the broadcast centroid matrix)."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        list(df.schema.fields)
-        + [T.StructField(blk_col, T.IntegerType()), T.StructField(sim_col, T.DoubleType())]
-    )
-    C = np.ascontiguousarray(centroids, dtype=np.float64)
-
-    def gen(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]],
-                dtype=np.float64,
-            )
-            Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-300)
-            sims = Xn @ C.T
-            blk = np.argmax(sims, axis=1)
-            out = pdf.copy()
-            out[blk_col] = blk.astype("int32")
-            out[sim_col] = sims[np.arange(len(pdf)), blk]
-            yield out
-
-    return df.mapInPandas(gen, schema=schema)
+    return _cosine_topk_tail(cand, k, probe_id, target_id, probe_vec, target_vec)
 
 
 def embedding_near_dup_pairs(
@@ -378,9 +345,9 @@ def embedding_near_dup_pairs(
     Centroid-blocked all-pairs with angular bound pruning (the exact
     counterpart of IVF, no driver collect of the data):
 
-    1. Train ``n_blocks`` spherical k-means centroids on a bounded
-       deterministic sample (xxhash64-ordered top-``train_sample`` — the
-       only driver-side materialization, fixed-size regardless of corpus).
+    1. Train ``n_blocks`` spherical k-means centroids on the bounded
+       shared ``_train_sample`` (the only driver-side materialization,
+       fixed-size regardless of corpus).
     2. Assign every row its nearest centroid block + cos-to-centroid (one
        Arrow matmul per batch; per-block min-cos aggregates to an angular
        radius r_b = arccos(min cos) — n_blocks scalar rows of metadata).
@@ -419,21 +386,18 @@ def embedding_near_dup_pairs(
     base = df.select(
         F.col(id_col).cast("long").alias("__id"), F.col(vec_col).alias("__vec")
     )
-    sample = (
-        base.orderBy(F.xxhash64(F.col("__id"))).limit(train_sample).toPandas()
-    )
-    if len(sample) == 0:
+    X = _train_sample(base, "__id", "__vec", train_sample)
+    if len(X) == 0:
         return spark.createDataFrame([], out_schema)
-    X = np.asarray(
-        [np.asarray(v, dtype=np.float64) for v in sample["__vec"]], dtype=np.float64
-    )
     C = train_centroids_np(X, n_blocks)
     n_blocks = len(C)
 
     # checkpoint: the assign matmul feeds BOTH the radii collect (driver
     # metadata, n_blocks rows) and the routed join — without it the whole
     # stage recomputes for each (measured 2x on the end-to-end time)
-    assigned = _assign_blocks(base, "__vec", C).localCheckpoint()
+    assigned = with_ivf_lists(
+        base, "__vec", C, list_col="__blk", sim_col="__csim"
+    ).localCheckpoint()
     # block metadata: angular radius per block (n_blocks rows — not data)
     radii_rows = (
         assigned.groupBy("__blk").agg(F.min("__csim").alias("min_cos")).collect()
@@ -446,7 +410,7 @@ def embedding_near_dup_pairs(
 
     theta = np.arccos(np.clip(C @ C.T, -1.0, 1.0))
     tasks = []  # (task_id, blk, side) routing triples
-    task_meta = []  # (task_id, is_diag)
+    diag = {}  # task_id -> is_diag
     tid = 0
     for i in range(n_blocks):
         if not present[i]:
@@ -461,9 +425,8 @@ def embedding_near_dup_pairs(
             tasks.append((tid, i, 0))
             if i != j:
                 tasks.append((tid, j, 1))
-            task_meta.append((tid, i == j))
+            diag[tid] = i == j
             tid += 1
-    diag = {t: d for t, d in task_meta}
 
     route = spark.createDataFrame(
         tasks, "task_id INT, __blk INT, side INT"
@@ -475,29 +438,15 @@ def embedding_near_dup_pairs(
     def refine(key, pdf):
         is_diag = diag.get(int(key[0]), True)
         left = pdf[pdf["side"] == 0]
-        V_l = np.asarray(
-            [np.asarray(v, dtype=np.float64) for v in left["__vec"]], dtype=np.float64
-        )
-        if V_l.size == 0:
+        right = left if is_diag else pdf[pdf["side"] == 1]
+        if len(left) == 0 or len(right) == 0:
             return pd.DataFrame({"a_id": [], "b_id": []}).astype("int64")
-        V_l /= np.maximum(np.linalg.norm(V_l, axis=1, keepdims=True), 1e-300)
-        ids_l = left["__id"].to_numpy()
-        if is_diag:
-            S = V_l @ V_l.T
-            ii, jj = np.nonzero(np.triu(S >= tau, k=1))
-            aa, bb = ids_l[ii], ids_l[jj]
-        else:
-            right = pdf[pdf["side"] == 1]
-            V_r = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in right["__vec"]],
-                dtype=np.float64,
-            )
-            if V_r.size == 0:
-                return pd.DataFrame({"a_id": [], "b_id": []}).astype("int64")
-            V_r /= np.maximum(np.linalg.norm(V_r, axis=1, keepdims=True), 1e-300)
-            ids_r = right["__id"].to_numpy()
-            ii, jj = np.nonzero(V_l @ V_r.T >= tau)
-            aa, bb = ids_l[ii], ids_r[jj]
+        V_l = _unit_rows(_matrix(left["__vec"]))
+        V_r = V_l if is_diag else _unit_rows(_matrix(right["__vec"]))
+        hit = V_l @ V_r.T >= tau
+        # an intra-block pair only once: (i,i)'s strict upper triangle
+        ii, jj = np.nonzero(np.triu(hit, k=1) if is_diag else hit)
+        aa, bb = left["__id"].to_numpy()[ii], right["__id"].to_numpy()[jj]
         lo = np.minimum(aa, bb)
         hi = np.maximum(aa, bb)
         return pd.DataFrame({"a_id": lo.astype("int64"), "b_id": hi.astype("int64")})
@@ -541,25 +490,11 @@ def semantic_dedup(
     straggler — the mitigation (not needed on this corpus) is the same
     angular-bound block split used by embedding_near_dup_pairs."""
     import pandas as pd
-    from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    from geografir_spark.operators.text import hash60_expr
-
-    h = hash60_expr(f"CAST({id_col} AS STRING)", "spark")
-    sample = (
-        df.select(id_col, vec_col)
-        .orderBy(F.expr(h), F.col(id_col))
-        .limit(train_sample)
-        .toPandas()
-    )
-    X = np.asarray(
-        [np.asarray(v, dtype=np.float64) for v in sample[vec_col]], dtype=np.float64
-    )
-    C = train_centroids_np(X, n_clusters)
-
-    assigned = _assign_blocks(
-        df.select(id_col, vec_col), vec_col, C, blk_col="cluster_id"
+    C = train_centroids_np(_train_sample(df, id_col, vec_col, train_sample), n_clusters)
+    assigned = with_ivf_lists(
+        df.select(id_col, vec_col), vec_col, C, list_col="cluster_id"
     )
     out_schema = T.StructType(
         [
@@ -571,10 +506,7 @@ def semantic_dedup(
 
     def prune(pdf: "pd.DataFrame") -> "pd.DataFrame":
         pdf = pdf.sort_values(id_col).reset_index(drop=True)
-        V = np.asarray(
-            [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]], dtype=np.float64
-        )
-        V /= np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-300)
+        V = _unit_rows(_matrix(pdf[vec_col]))
         G = V @ V.T
         dropped = np.tril(G >= tau, k=-1).any(axis=1)
         return pd.DataFrame(

@@ -2658,14 +2658,9 @@ def _cos_expr(dialect: str) -> str:
     """Cosine similarity of pvec/tvec array columns, both dialects."""
     if dialect == "duckdb":
         return "list_cosine_similarity(pvec, tvec)"
-    return (
-        "aggregate(zip_with(pvec, tvec, (a, b) -> CAST(a AS DOUBLE) * CAST(b AS DOUBLE)),"
-        " 0.0D, (acc, x) -> acc + x)"
-        " / (sqrt(aggregate(transform(pvec, a -> CAST(a AS DOUBLE) * CAST(a AS DOUBLE)),"
-        " 0.0D, (acc, x) -> acc + x))"
-        " * sqrt(aggregate(transform(tvec, a -> CAST(a AS DOUBLE) * CAST(a AS DOUBLE)),"
-        " 0.0D, (acc, x) -> acc + x)))"
-    )
+    from geografir_spark.operators.similarity import cosine_sql
+
+    return cosine_sql("pvec", "tvec")
 
 
 def _hybrid_sql(dialect: str) -> str:
@@ -2801,6 +2796,16 @@ _ANN_K = 5
 _ANN_PROBES = 8
 
 
+def _ann_inputs(spark: SparkSession, sf_dir: str) -> "tuple[DataFrame, DataFrame]":
+    """The ANN queries' (probes, targets): the first _ANN_PROBES embeddings
+    as (probe_id, pvec) and all of them as (neighbor_id, tvec)."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    probes = emb.filter(F.col("vec_id") < _ANN_PROBES).selectExpr(
+        "vec_id AS probe_id", "embedding AS pvec"
+    )
+    return probes, emb.selectExpr("vec_id AS neighbor_id", "embedding AS tvec")
+
+
 @register(
     "ann_cosine_topk",
     f"""
@@ -2822,11 +2827,7 @@ def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     baseline; JVM-native fold, no Python)."""
     from geografir_spark.operators.similarity import cosine_topk
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    probes = emb.filter(F.col("vec_id") < _ANN_PROBES).selectExpr(
-        "vec_id AS probe_id", "embedding AS pvec"
-    )
-    targets = emb.selectExpr("vec_id AS neighbor_id", "embedding AS tvec")
+    probes, targets = _ann_inputs(spark, sf_dir)
     return cosine_topk(probes, targets, k=_ANN_K)
 
 
@@ -2883,11 +2884,7 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     end-to-end (signatures, buckets, candidates, refine, ranks)."""
     from geografir_spark.operators.similarity import lsh_bucketed_topk
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    probes = emb.filter(F.col("vec_id") < _ANN_PROBES).selectExpr(
-        "vec_id AS probe_id", "embedding AS pvec"
-    )
-    targets = emb.selectExpr("vec_id AS neighbor_id", "embedding AS tvec")
+    probes, targets = _ann_inputs(spark, sf_dir)
     return lsh_bucketed_topk(probes, targets, k=_ANN_K, dim=64, n_planes=4, n_tables=8)
 
 
@@ -2903,7 +2900,10 @@ def _replayed_centroid_values(sf_dir: str, n_lists: int) -> str:
     (hash60(vec_id), vec_id) order — hash60 is plain md5, replayed here
     with hashlib — and ``train_centroids_np`` is RNG-free, so the numpy
     matrix trained here is bit-identical to the one the Spark queries train
-    at the same sf. Shared by the IVF-Flat and SemDeDup oracles."""
+    at the same sf. Shared by the IVF-Flat and SemDeDup oracles; the
+    near-dup blocks of ``dedup_embedding_pairs`` train on the same sample
+    (``similarity._train_sample``), though its exact oracle needs no
+    centroids."""
     import hashlib
 
     import numpy as np
@@ -2981,11 +2981,7 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids outside Spark and replays the full pipeline in DuckDB."""
     from geografir_spark.operators.similarity import ivf_topk
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    probes = emb.filter(F.col("vec_id") < _ANN_PROBES).selectExpr(
-        "vec_id AS probe_id", "embedding AS pvec"
-    )
-    targets = emb.selectExpr("vec_id AS neighbor_id", "embedding AS tvec")
+    probes, targets = _ann_inputs(spark, sf_dir)
     return ivf_topk(
         probes, targets, k=_ANN_K, n_lists=_IVF_LISTS, n_probes=_IVF_PROBES_N
     )
@@ -3154,26 +3150,6 @@ def q_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer").select("c_custkey")
     o = load_table(spark, sf_dir, "orders").selectExpr("o_custkey AS c_custkey")
     return c.exceptAll(o).distinct()
-
-
-def _jaccard_sql(dialect: str) -> str:
-    """Exact word-set jaccard on same-source doc pairs (the post-LSH refine
-    verification op)."""
-    if dialect == "spark":
-        ta, tb = "array_distinct(split(a.text, ' '))", "array_distinct(split(b.text, ' '))"
-        inter = f"size(array_intersect({ta}, {tb}))"
-        uni = f"size(array_union({ta}, {tb}))"
-    else:
-        ta, tb = "list_distinct(string_split(a.text, ' '))", "list_distinct(string_split(b.text, ' '))"
-        inter = f"len(list_intersect({ta}, {tb}))"
-        uni = f"len(list_distinct(list_concat({ta}, {tb})))"
-    return f"""
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           {inter} AS n_common, {uni} AS n_union
-    FROM documents a JOIN documents b
-      ON a.source = b.source AND a.doc_id < b.doc_id
-    WHERE {inter} * 10 >= {uni} * 3
-    """
 
 
 def _ngram_jaccard_spark_sql() -> str:
@@ -3677,11 +3653,10 @@ _NEARDUP_TAU = 0.42  # sits in a >=7e-4-wide gap of the cosine distribution
     """,
 )
 def q_dedup_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (cos >= tau). Exact baseline:
-    broadcast self-join + JVM-native fold for the dot product (no Python).
-    Scale path: the random-hyperplane LSH bucketing in
-    operators/similarity.py prefilters candidates so the exact refine only
-    touches same-bucket pairs — same filter-refine shape as the PIP join."""
+    """Embedding-cosine near-duplicate pairs (cos >= tau), exact:
+    centroid blocks with angular-bound pruning, then one BLAS matmul per
+    surviving block pair (operators/similarity.embedding_near_dup_pairs)
+    — the same filter-refine shape as the PIP join."""
     from geografir_spark.operators.similarity import embedding_near_dup_pairs
 
     emb = load_table(spark, sf_dir, "embeddings")

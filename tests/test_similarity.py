@@ -181,3 +181,86 @@ def test_exact_cosine_topk_refuses_oversized_probe_set(spark, monkeypatch):
     assert similarity.cosine_topk(probes.limit(4), targets, k=2).count() == 8
     with pytest.raises(ValueError, match=r"over 4 probes \(5 counted.*ivf_topk"):
         similarity.cosine_topk(probes, targets, k=2)
+
+
+def test_one_training_sample_for_every_centroid_user(spark, monkeypatch):
+    """ivf_topk, semantic_dedup and embedding_near_dup_pairs train on the
+    same matrix: the first n rows in (hash60(id), id) order — the order
+    queries._replayed_centroid_values replays outside Spark."""
+    import hashlib
+
+    from geografir_spark.operators import similarity
+    from geografir_spark.sources.pages import load_table
+
+    seen = []
+    train = similarity.train_centroids_np
+
+    def spy(X, n_lists, *args, **kwargs):
+        seen.append(np.array(X, dtype=np.float64, copy=True))
+        return train(X, n_lists, *args, **kwargs)
+
+    monkeypatch.setattr(similarity, "train_centroids_np", spy)
+    n = 64
+    emb = load_table(spark, SF_DIR, "embeddings")
+    probes = emb.filter("vec_id < 8").selectExpr("vec_id AS probe_id", "embedding AS pvec")
+    targets = emb.selectExpr("vec_id AS neighbor_id", "embedding AS tvec")
+    similarity.ivf_topk(probes, targets, k=K, n_lists=8, train_sample=n)
+    similarity.semantic_dedup(emb, tau=0.464, n_clusters=8, train_sample=n)
+    similarity.embedding_near_dup_pairs(emb, tau=0.42, n_blocks=8, train_sample=n)
+    assert len(seen) == 3
+
+    pdf = emb.select("vec_id", "embedding").toPandas()
+    h = [int(hashlib.md5(str(int(i)).encode()).hexdigest()[:15], 16) for i in pdf["vec_id"]]
+    order = sorted(range(len(pdf)), key=lambda r: (h[r], int(pdf["vec_id"][r])))[:n]
+    want = np.asarray([pdf["embedding"][r] for r in order], dtype=np.float64)
+    for X in seen:
+        np.testing.assert_array_equal(X, want)
+
+
+def test_with_ivf_lists_sim_col(spark):
+    """n_probes=1: the list is the argmax of unit-row · centroid and the
+    sim is that dot product; n_probes=3: the stable top 3 lists."""
+    from geografir_spark.operators.similarity import with_ivf_lists
+
+    rng = np.random.RandomState(11)
+    X = rng.normal(size=(40, 6))
+    C = rng.normal(size=(5, 6))
+    C /= np.linalg.norm(C, axis=1, keepdims=True)
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in X[i]]) for i in range(len(X))], "id LONG, v ARRAY<DOUBLE>"
+    )
+    S = (X / np.linalg.norm(X, axis=1, keepdims=True)) @ C.T
+
+    one = with_ivf_lists(df, "v", C, list_col="l", sim_col="s").toPandas().sort_values("id")
+    assert len(one) == len(X)
+    np.testing.assert_array_equal(one["l"].to_numpy(), np.argmax(S, axis=1))
+    np.testing.assert_allclose(one["s"].to_numpy(), S.max(axis=1), rtol=1e-12)
+
+    three = with_ivf_lists(df, "v", C, n_probes=3, list_col="l", sim_col="s").toPandas()
+    top3 = np.argsort(-S, axis=1, kind="stable")[:, :3]
+    want = {(i, int(j)) for i in range(len(X)) for j in top3[i]}
+    assert set(zip(three["id"].tolist(), three["l"].tolist())) == want
+    assert len(three) == 3 * len(X)
+    np.testing.assert_allclose(
+        three["s"].to_numpy(), S[three["id"].to_numpy(), three["l"].to_numpy()], rtol=1e-12
+    )
+
+
+def test_cosine_sql_zero_vector_reads_zero(spark):
+    """A zero-norm side reads 0.0. An unguarded cosine divides by a zero
+    norm product, which raises DIVIDE_BY_ZERO under ANSI SQL (NULL without
+    it), and the hybrid_retrieval_rrf semantic leg ranks by this
+    expression."""
+    from geografir_spark.queries import _cos_expr
+
+    df = spark.createDataFrame(
+        [([0.0, 0.0], [1.0, 2.0]), ([0.0, 0.0], [0.0, 0.0]), ([1.0, 0.0], [1.0, 1.0])],
+        "pvec ARRAY<DOUBLE>, tvec ARRAY<DOUBLE>",
+    )
+    got = [r["c"] for r in df.selectExpr(f"{_cos_expr('spark')} AS c").collect()]
+    assert got[:2] == [0.0, 0.0]
+    assert got[2] == pytest.approx(2**-0.5, rel=1e-15)
+
+    from geografir_spark.operators.similarity import cosine_sql
+
+    assert _cos_expr("spark") == cosine_sql("pvec", "tvec")
