@@ -83,6 +83,21 @@ def axis_index_sql(coord_expr: str, res: int, *, lat: bool) -> str:
     )
 
 
+def _spread_pair_steps(steps: list[dict[str, str]], px: str, py: str, prefix: str) -> tuple[str, str]:
+    """Append the ``_SPREAD_STEPS`` bit-spread of columns ``px``/``py`` to
+    ``steps`` (temp columns ``{prefix}xs{i}``/``{prefix}ys{i}``) and return
+    the names of the two spread columns."""
+    for i, (sh, mask) in enumerate(_SPREAD_STEPS):
+        steps.append(
+            {
+                f"{prefix}xs{i}": f"(({px} | ({px} << {sh})) & {mask})",
+                f"{prefix}ys{i}": f"(({py} | ({py} << {sh})) & {mask})",
+            }
+        )
+        px, py = f"{prefix}xs{i}", f"{prefix}ys{i}"
+    return px, py
+
+
 def interleave_steps(xi: str, yi: str, res: "int | str", out: str = "cell") -> list[dict[str, str]]:
     """Step list Morton-interleaving the integer grid indices ``xi``/``yi``
     (SQL expressions) into the cell id ``out`` at resolution ``res`` — a
@@ -93,15 +108,7 @@ def interleave_steps(xi: str, yi: str, res: "int | str", out: str = "cell") -> l
     reference columns named in steps < i. Temp columns start with ``__``.
     """
     steps: list[dict[str, str]] = [{"__xi": xi, "__yi": yi}]
-    px, py = "__xi", "__yi"
-    for i, (sh, mask) in enumerate(_SPREAD_STEPS):
-        steps.append(
-            {
-                f"__xs{i}": f"(({px} | ({px} << {sh})) & {mask})",
-                f"__ys{i}": f"(({py} | ({py} << {sh})) & {mask})",
-            }
-        )
-        px, py = f"__xs{i}", f"__ys{i}"
+    px, py = _spread_pair_steps(steps, "__xi", "__yi", "__")
     steps.append({out: f"((({px} | ({py} << 1)) << {RES_BITS}) | {res})"})
     return steps
 
@@ -182,15 +189,7 @@ def geohash_steps(
             ),
         }
     ]
-    px, py = "__gxi", "__gyi"
-    for i, (sh, mask) in enumerate(_SPREAD_STEPS):
-        steps.append(
-            {
-                f"__gxs{i}": f"(({px} | ({px} << {sh})) & {mask})",
-                f"__gys{i}": f"(({py} | ({py} << {sh})) & {mask})",
-            }
-        )
-        px, py = f"__gxs{i}", f"__gys{i}"
+    px, py = _spread_pair_steps(steps, "__gxi", "__gyi", "__g")
     # lon bits land on the ODD (higher) interleave positions = MSB-first
     steps.append({"__gh": f"(({px} << 1) | {py})"})
     bits = 5 * peven

@@ -20,12 +20,13 @@ Fixed-point discipline:
 
 Scale shape: each round is one equi-join (ranks ⋈ edges on src), one
 groupBy(dst) with map-side partial sums, one left join back onto the node
-set for teleport-only nodes. The unrolled SQL form re-derives the edge
-relation per round when Spark inlines CTEs — fine for a cheap base (the
-registry query's page graph) and for DuckDB; the ``pagerank`` DataFrame
-function below is the production path: it localCheckpoints edges/nodes
-once and iterates on materialized ranks, O(1) plan depth per round, the
-same shape at 1000 executors.
+set for teleport-only nodes. ``pagerank_sql`` is the one PageRank, run by
+both engines. Spark inlines CTEs, so the unrolled form re-derives the
+edge relation in every round: an engine caller localCheckpoints its edge
+relation first and binds it with ``spark.sql(sql, cc=frame)``
+(``queries.q_pagerank_cells``), which leaves only the small edge table
+to re-read. The plan still grows with ``iters`` (one join + one
+aggregate per round); the registry runs 5.
 """
 
 from __future__ import annotations
@@ -87,62 +88,6 @@ def pagerank_sql(
     LEFT JOIN indeg i ON f.node = i.node
     LEFT JOIN outdeg o ON f.node = o.node
     """
-
-
-def pagerank(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    weight: str = "w",
-    iters: int = 5,
-) -> DataFrame:
-    """Production-path PageRank: identical arithmetic to ``pagerank_sql``
-    but iterating on materialized DataFrames — edges/degrees/nodes are
-    localCheckpointed once, each round is one join + one partial-agg
-    groupBy + one left join, and the plan depth stays O(1) regardless of
-    ``iters`` (no 5×-unrolled recomputation of the edge base).
-
-    Returns ``node, rank_scaled``.
-    """
-    e = (
-        edges.select(
-            F.col(src).alias("src"),
-            F.col(dst).alias("dst"),
-            F.col(weight).cast("bigint").alias("w"),
-        )
-    ).localCheckpoint(eager=True)
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-    ).localCheckpoint(eager=True)
-    deg = e.groupBy("src").agg(F.sum("w").alias("totw")).localCheckpoint(eager=True)
-    ranks = nodes.withColumn("rank", F.lit(SCALE).cast("bigint"))
-    contrib_edges = e.join(deg, "src")
-    for _ in range(iters):
-        acc = (
-            contrib_edges.join(ranks, contrib_edges["src"] == ranks["node"])
-            .select(
-                F.col("dst").alias("node"),
-                # integer DIV, not float division: rank*85 can exceed 2^53,
-                # where a double round-trip would silently lose exactness
-                F.expr(
-                    f"((rank * {DAMP_NUM} DIV {DAMP_DEN}) * w) DIV totw"
-                ).alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("acc"))
-        )
-        ranks = (
-            nodes.join(acc, "node", "left")
-            .select(
-                "node",
-                (F.lit(TELEPORT) + F.coalesce(F.col("acc"), F.lit(0)))
-                .cast("bigint")
-                .alias("rank"),
-            )
-        ).localCheckpoint(eager=True)
-    return ranks.select("node", F.col("rank").alias("rank_scaled"))
 
 
 def triangle_count_sql(
@@ -223,7 +168,8 @@ def oriented_edges(e: DataFrame) -> DataFrame:
 def triangle_count(edges_df, src: str, dst: str, min_weight: int = 1):
     """DataFrame form of ``triangle_count_sql`` for the engine side:
     canonicalize + dedup the edge set ONCE, localCheckpoint it (bounded:
-    the deduped edge list, the same barrier discipline as ``pagerank``),
+    the deduped edge list, the same barrier discipline as the registry's
+    PageRank, which checkpoints its edge relation before ``pagerank_sql``),
     then enumerate wedges over the DEGREE-ORDERED orientation (see
     ``oriented_edges``) — each triangle is counted exactly once at its
     (deg, id)-minimum vertex, and per-join-key fan-out is the oriented

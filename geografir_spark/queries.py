@@ -1072,48 +1072,22 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-duplicate candidate pairs (16 hashes, 4 bands,
-    3-word shingles) — the full shingle→minhash→band→bucket-join pipeline.
+    3-word shingles) — the full shingle→minhash→band→bucket pipeline,
+    degenerate-bucket cap included (``max_bucket=256``,
+    operators/dedup.py:minhash_pairs_sql).
 
-    The signature stage is localCheckpointed before banding: each doc's
-    signature feeds 4 band rows on both join sides, and without
-    materialization the optimizer re-inlines the (md5-per-shingle × 16
-    hash) computation into every consumer (measured 65 s → ~3 s at sf0.1).
-    A checkpoint is no ``CacheManager`` entry, so nothing outlives the
-    query."""
-    from geografir_spark.geo import cells
+    The Spark dialect needs no stage barrier: one ``inline`` generator
+    emits each doc's band rows from a single signature computation, and
+    in-bucket pairs come from array lambdas over the bucket's doc list, so
+    there is no self-join to inline the signatures into twice."""
     from geografir_spark.operators import dedup
 
-    # test parquets are single-row-group files (scan parallelism 1) — spread
-    # the signature compute across cores; production multi-file tables skip
-    # this (the scan is already split).
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
+    return _sql_query(
+        spark,
+        sf_dir,
+        dedup.minhash_pairs_sql("documents", "doc_id", "text", "spark"),
+        repartition=True,
     )
-    sig_steps = dedup.minhash_signature_exprs("text", "spark")
-    # band outputs keep non-"__" names so apply_steps retains them
-    sig_steps.append(
-        {n.lstrip("_"): e for n, e in dedup.band_sig_exprs().items()}
-    )
-    sigs = cells.apply_steps(docs, sig_steps).select(
-        "doc_id", *[f"band{b}" for b in range(4)]
-    ).localCheckpoint()
-    band_rows = None
-    for b in range(4):
-        part = sigs.selectExpr(
-            "doc_id AS doc", f"{b} AS band_idx", f"band{b} AS sig"
-        )
-        band_rows = part if band_rows is None else band_rows.unionByName(part)
-    a = band_rows.selectExpr("doc AS doc_a", "band_idx", "sig")
-    b_ = band_rows.selectExpr("doc AS doc_b", "band_idx AS band_idx_b", "sig AS sig_b")
-    pairs = a.join(
-        b_,
-        (F.col("band_idx") == F.col("band_idx_b"))
-        & (F.col("sig") == F.col("sig_b"))
-        & (F.col("doc_a") < F.col("doc_b")),
-    )
-    return pairs.select("doc_a", "doc_b").distinct()
 
 
 @register(
@@ -2189,16 +2163,23 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _winnow_sql(dialect: str) -> str:
-    """Same-source doc pairs sharing >= 2 winnowed fingerprints — the
-    rolling-hash (MOSS) containment-candidate join, one SQL text per
-    dialect from the shared winnow_exprs steps."""
+def _winnow_fps_sql(dialect: str) -> str:
+    """Per-document winnowed fingerprints: ``doc_id, source, text, fps``
+    from the shared winnow_exprs steps."""
     from geografir_spark.geo.cells import nested_sql
     from geografir_spark.operators import text as textops
 
     steps = textops.winnow_exprs("text", dialect)
     steps[-1] = {"fps": steps[-1]["__fps"]}
-    f = nested_sql("SELECT doc_id, source, text FROM documents", steps)
+    return nested_sql("SELECT doc_id, source, text FROM documents", steps)
+
+
+def _winnow_sql(dialect: str, fps: "str | None" = None) -> str:
+    """Same-source doc pairs sharing >= 2 winnowed fingerprints — the
+    rolling-hash (MOSS) containment-candidate join. ``fps`` names a
+    relation holding ``doc_id, source, fps`` (the engine's checkpoint);
+    without it the fingerprints are computed in a leading ``f`` CTE."""
+    head = f"f AS ({_winnow_fps_sql(dialect)}),\n         " if fps is None else ""
     unnest = "explode(fps)" if dialect == "spark" else "unnest(fps)"
     # document-frequency cap: a fingerprint held by more than max_df docs of
     # a source is a stop-print — it carries no discriminative signal and its
@@ -2206,8 +2187,7 @@ def _winnow_sql(dialect: str) -> str:
     # the fixture's 31-token vocabulary makes low-hash shingles near-
     # universal). Same move MOSS makes; idf in spirit. Deterministic.
     return f"""
-    WITH f AS ({f}),
-         e AS (SELECT doc_id, source, {unnest} AS fp FROM f),
+    WITH {head}e AS (SELECT doc_id, source, {unnest} AS fp FROM {fps or "f"}),
          rare AS (SELECT source, fp FROM e
                   GROUP BY source, fp HAVING count(*) <= 10),
          er AS (SELECT e.doc_id, e.source, e.fp
@@ -2233,48 +2213,19 @@ def q_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles ~2/(w+1) of the shingle volume (the winnowing density bound)
     and the df-cap bounds every join bucket at 10 docs.
 
-    The fingerprint stage is localCheckpointed before the explode: __fps
-    references __hs (md5 per shingle) five times and CollapseProject would
-    otherwise substitute the whole shingle-hash expression into each — the
-    same re-inlining blowup documented in BENCH.md finding #1 (measured
-    223 s -> ~3 s at sf0.1; the minhash query needs the identical
-    barrier)."""
-    from geografir_spark.geo import cells
-    from geografir_spark.operators import text as textops
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "source", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    steps = textops.winnow_exprs("text", "spark")
-    steps[-1] = {"fps": steps[-1]["__fps"]}
-    f = (
-        cells.apply_steps(docs, steps)
-        .select("doc_id", "source", "fps")
-        .localCheckpoint()
-    )
-    e = f.selectExpr("doc_id", "source", "explode(fps) AS fp")
-    rare = (
-        e.groupBy("source", "fp")
-        .agg(F.count("*").alias("__df"))
-        .filter(F.col("__df") <= 10)
-        .drop("__df")
-    )
-    er = e.join(rare, ["source", "fp"])
-    a = er.selectExpr("doc_id AS doc_a", "source", "fp")
-    b = er.selectExpr("doc_id AS doc_b", "source AS __sb", "fp AS __fpb")
-    pairs = a.join(
-        b,
-        (F.col("source") == F.col("__sb"))
-        & (F.col("fp") == F.col("__fpb"))
-        & (F.col("doc_a") < F.col("doc_b")),
-    )
-    return (
-        pairs.groupBy("doc_a", "doc_b")
-        .agg(F.countDistinct("fp").alias("n_shared"))
-        .filter(F.col("n_shared") >= 2)
-    )
+    Engine side: the fingerprint stage is localCheckpointed and the
+    oracle's own tail runs over it. __fps references __hs (md5 per
+    shingle) five times, and without the barrier CollapseProject
+    substitutes the whole shingle-hash expression into each of the tail's
+    consumers — the re-inlining blowup documented in BENCH.md finding #1
+    (measured 223 s -> ~3 s at sf0.1)."""
+    cc = _sql_query(
+        spark,
+        sf_dir,
+        f"SELECT doc_id, source, fps FROM ({_winnow_fps_sql('spark')})",
+        repartition=True,
+    ).localCheckpoint()
+    return spark.sql(_winnow_sql("spark", "{cc}"), cc=cc)
 
 
 _BPE_PAT = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"  # word / number / punct runs —
@@ -2654,111 +2605,69 @@ _RRF_K = 60
 _HYBRID_N = 20
 
 
+def _duckdb_cosine(a: str, b: str) -> str:
+    """The oracles' cosine of two DuckDB list columns. A zero vector reads
+    0.0, as in the engine's ``similarity.cosine_sql``; DuckDB 1.0's bare
+    ``list_cosine_similarity`` reads -1.0 there. The result type is the
+    lists' element type, as with the bare call."""
+    return (
+        f"CASE WHEN list_dot_product({a}, {a}) = 0"
+        f" OR list_dot_product({b}, {b}) = 0"
+        f" THEN 0.0 ELSE list_cosine_similarity({a}, {b}) END"
+    )
+
+
 def _cos_expr(dialect: str) -> str:
     """Cosine similarity of pvec/tvec array columns, both dialects."""
     if dialect == "duckdb":
-        return "list_cosine_similarity(pvec, tvec)"
+        return _duckdb_cosine("pvec", "tvec")
     from geografir_spark.operators.similarity import cosine_sql
 
     return cosine_sql("pvec", "tvec")
 
 
-def _hybrid_sql(dialect: str) -> str:
-    """Hybrid retrieval: fuse the lexical (BM25 over text) and semantic
-    (exact cosine over embeddings, probe = vec 0) candidate lists with
-    reciprocal-rank fusion — THE standard hybrid-search combiner
-    (RRF: score = Σ 1/(k + rank), k=60). Integer-exact: each list
-    contributes floor(1e6/(60+rank)) micro-units — rank is an integer,
-    the division one deterministic double op, floor exact — summed as
-    BIGINT over at most two terms. Docs in only one list still score
-    (FULL OUTER semantics via the union-groupBy form). vec_id aligns
-    with doc_id by fixture construction (500 rows each)."""
+def _hybrid_lex_sql(dialect: str) -> str:
+    """Hybrid retrieval's lexical leg: BM25's top-N list."""
     from geografir_spark.operators.ranking import bm25_sql
 
-    bm = bm25_sql("documents", "doc_id", "text", _BM25_TERMS, dialect, k=_HYBRID_N)
-    cos = _cos_expr(dialect)
-    # Each candidate list is bounded to ≤ N rows BEFORE ranking: the
-    # lexical leg is BM25's top-k output, the semantic leg is cut to top-N
-    # by ORDER BY + LIMIT (Spark: TakeOrderedAndProject — a distributed
-    # per-partition top-k + driver merge, NOT a global sort shuffle of the
-    # corpus; the r3 form ranked the FULL embeddings table in one
-    # partition-less window, a single-reducer sort at 100×).  Ranks within
-    # each ≤N-row list come from a theta-join count (rank(a) = #rows ≥ a in
-    # the list order), an N²≤400-row join — the query plan carries NO
-    # partition-less WindowExec at all.
+    return bm25_sql("documents", "doc_id", "text", _BM25_TERMS, dialect, k=_HYBRID_N)
+
+
+def _hybrid_sem_sql(dialect: str) -> str:
+    """Hybrid retrieval's semantic leg: the top-N embeddings by exact
+    cosine to probe vec 0, cut by ORDER BY + LIMIT (Spark:
+    TakeOrderedAndProject — a distributed per-partition top-k + driver
+    merge, NOT a global sort shuffle of the corpus)."""
     return f"""
-    WITH lex_top AS ({bm}),
-         lex AS (SELECT a.doc_id, CAST(count(*) AS BIGINT) AS rnk
-                 FROM lex_top a JOIN lex_top b
-                   ON b.score_micro > a.score_micro
-                      OR (b.score_micro = a.score_micro
-                          AND b.doc_id <= a.doc_id)
-                 GROUP BY a.doc_id),
-         pv AS (SELECT embedding AS pvec FROM embeddings WHERE vec_id = 0),
-         sem0 AS (SELECT vec_id AS doc_id, {cos} AS c
-                  FROM (SELECT vec_id, embedding AS tvec FROM embeddings
-                        WHERE vec_id <> 0), pv),
-         sem_top AS (SELECT doc_id, c FROM sem0
-                     ORDER BY c DESC, doc_id LIMIT {_HYBRID_N}),
-         sem AS (SELECT a.doc_id, CAST(count(*) AS BIGINT) AS rnk
-                 FROM sem_top a JOIN sem_top b
-                   ON b.c > a.c OR (b.c = a.c AND b.doc_id <= a.doc_id)
-                 GROUP BY a.doc_id),
-         contrib AS (SELECT doc_id,
-                            CAST(floor(1000000.0 / ({_RRF_K} + rnk))
-                                 AS BIGINT) AS c_micro
-                     FROM lex
-                     UNION ALL
-                     SELECT doc_id,
-                            CAST(floor(1000000.0 / ({_RRF_K} + rnk))
-                                 AS BIGINT) AS c_micro
-                     FROM sem)
-    SELECT doc_id, CAST(sum(c_micro) AS BIGINT) AS rrf_micro,
-           CAST(count(*) AS BIGINT) AS n_lists
-    FROM contrib GROUP BY doc_id
-    ORDER BY rrf_micro DESC, doc_id LIMIT 10
-    """
-
-
-@register("hybrid_retrieval_rrf", _hybrid_sql("duckdb"))
-def q_hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reciprocal-rank fusion of the BM25 lexical list and the exact-
-    cosine semantic list — hybrid search, the composition the two
-    retrieval legs exist for (see _hybrid_sql).
-
-    Engine shape: each top-N leg is computed ONCE and localCheckpointed
-    (20 rows) before the rank-and-fuse SQL — the theta-join rank
-    references its leg twice, and Spark inlines CTEs, so the single-
-    statement form re-ran BM25 and the cosine scan per reference
-    (measured 2.2 s vs 1.1 s at sf0.1; the DuckDB oracle keeps the
-    single statement — it materializes CTEs)."""
-    from geografir_spark.operators.ranking import bm25_sql
-
-    # materialize the two corpus-scanning legs once each (20 rows), then
-    # run the bounded rank+fusion tail over the checkpointed frames
-    bm = bm25_sql(
-        "documents", "doc_id", "text", _BM25_TERMS, "spark", k=_HYBRID_N
-    )
-    lex_top = _sql_query(spark, sf_dir, bm, repartition=True).localCheckpoint()
-    cos_sql = f"""
     WITH pv AS (SELECT embedding AS pvec FROM embeddings WHERE vec_id = 0),
-         sem0 AS (SELECT vec_id AS doc_id, {_cos_expr('spark')} AS c
+         sem0 AS (SELECT vec_id AS doc_id, {_cos_expr(dialect)} AS c
                   FROM (SELECT vec_id, embedding AS tvec FROM embeddings
                         WHERE vec_id <> 0), pv)
     SELECT doc_id, c FROM sem0 ORDER BY c DESC, doc_id LIMIT {_HYBRID_N}
     """
-    sem_top = _sql_query(
-        spark, sf_dir, cos_sql, views=("embeddings",), repartition=True
-    ).localCheckpoint()
-    return spark.sql(f"""
+
+
+def _hybrid_tail_sql(lex_top: str, sem_top: str) -> str:
+    """Reciprocal-rank fusion of the ≤N-row lists ``lex_top`` (doc_id,
+    score_micro) and ``sem_top`` (doc_id, c) — THE standard hybrid-search
+    combiner (RRF: score = Σ 1/(k + rank), k=60), identical in both
+    dialects. Integer-exact: each list contributes floor(1e6/(60+rank))
+    micro-units — rank is an integer, the division one deterministic
+    double op, floor exact — summed as BIGINT over at most two terms.
+    Docs in only one list still score (FULL OUTER semantics via the
+    union-groupBy form). vec_id aligns with doc_id by fixture
+    construction (500 rows each). Ranks come from a theta-join count
+    (rank(a) = #rows ≥ a in the list order), an N²≤400-row join — the
+    plan carries NO partition-less WindowExec at all."""
+    return f"""
     WITH lex AS (SELECT a.doc_id, CAST(count(*) AS BIGINT) AS rnk
-                 FROM {{lex_top}} a JOIN {{lex_top}} b
+                 FROM {lex_top} a JOIN {lex_top} b
                    ON b.score_micro > a.score_micro
                       OR (b.score_micro = a.score_micro
                           AND b.doc_id <= a.doc_id)
                  GROUP BY a.doc_id),
          sem AS (SELECT a.doc_id, CAST(count(*) AS BIGINT) AS rnk
-                 FROM {{sem_top}} a JOIN {{sem_top}} b
+                 FROM {sem_top} a JOIN {sem_top} b
                    ON b.c > a.c OR (b.c = a.c AND b.doc_id <= a.doc_id)
                  GROUP BY a.doc_id),
          contrib AS (SELECT doc_id,
@@ -2774,7 +2683,37 @@ def q_hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(count(*) AS BIGINT) AS n_lists
     FROM contrib GROUP BY doc_id
     ORDER BY rrf_micro DESC, doc_id LIMIT 10
-    """, lex_top=lex_top, sem_top=sem_top)
+    """
+
+
+@register(
+    "hybrid_retrieval_rrf",
+    f"""
+    WITH lex_top AS ({_hybrid_lex_sql("duckdb")}),
+         sem_top AS ({_hybrid_sem_sql("duckdb")})
+    SELECT * FROM ({_hybrid_tail_sql("lex_top", "sem_top")})
+    """,
+)
+def q_hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Reciprocal-rank fusion of the BM25 lexical list and the exact-
+    cosine semantic list — hybrid search, the composition the two
+    retrieval legs exist for (see _hybrid_tail_sql).
+
+    Engine side: each ≤20-row leg is localCheckpointed and the oracle's
+    own rank-and-fuse tail runs over the two checkpoints. The theta-join
+    rank reads its leg twice and Spark inlines CTEs, so the single-
+    statement form re-ran BM25 and the cosine scan per reference
+    (measured 2.2 s vs 1.1 s at sf0.1; DuckDB materializes CTEs)."""
+    lex_top = _sql_query(
+        spark, sf_dir, _hybrid_lex_sql("spark"), repartition=True
+    ).localCheckpoint()
+    sem_top = _sql_query(
+        spark, sf_dir, _hybrid_sem_sql("spark"), views=("embeddings",),
+        repartition=True,
+    ).localCheckpoint()
+    return spark.sql(
+        _hybrid_tail_sql("{lex_top}", "{sem_top}"), lex_top=lex_top, sem_top=sem_top
+    )
 
 
 def _lang_id_sql(dialect: str) -> str:
@@ -2813,7 +2752,7 @@ def _ann_inputs(spark: SparkSession, sf_dir: str) -> "tuple[DataFrame, DataFrame
                WHERE vec_id < {_ANN_PROBES}),
          t AS (SELECT vec_id AS neighbor_id, embedding AS tvec FROM embeddings),
          d AS (SELECT probe_id, neighbor_id,
-                      list_cosine_similarity(pvec, tvec) AS c
+                      {_duckdb_cosine("pvec", "tvec")} AS c
                FROM p CROSS JOIN t WHERE probe_id != neighbor_id),
          r AS (SELECT probe_id, neighbor_id,
                       row_number() OVER (PARTITION BY probe_id
@@ -2865,7 +2804,7 @@ def _lsh_oracle_sql(n_planes: int = 4, n_tables: int = 8) -> str:
              FROM pb JOIN tb ON pb.tbl = tb.tbl AND pb.bucket = tb.bucket
              WHERE probe_id != neighbor_id),
     d AS (SELECT c.probe_id, c.neighbor_id,
-                 list_cosine_similarity(p.pvec, t.tvec) AS cs
+                 {_duckdb_cosine("p.pvec", "t.tvec")} AS cs
           FROM cand c JOIN p ON p.probe_id = c.probe_id
                       JOIN t ON t.neighbor_id = c.neighbor_id),
     r AS (SELECT probe_id, neighbor_id,
@@ -2962,7 +2901,7 @@ def _ivf_oracle_sql(sf_dir: str = "/root/testdata/sf0.01") -> str:
              FROM pl JOIN tl ON pl.list_id = tl.list_id
              WHERE pl.probe_id != tl.neighbor_id),
     d AS (SELECT probe_id, neighbor_id,
-                 list_cosine_similarity(pvec, tvec) AS cs FROM cand),
+                 {_duckdb_cosine("pvec", "tvec")} AS cs FROM cand),
     r AS (SELECT probe_id, neighbor_id,
                  row_number() OVER (PARTITION BY probe_id
                                     ORDER BY cs DESC, neighbor_id ASC) AS rank
@@ -3649,7 +3588,7 @@ _NEARDUP_TAU = 0.42  # sits in a >=7e-4-wide gap of the cosine distribution
     WITH e AS (SELECT vec_id, embedding FROM embeddings)
     SELECT a.vec_id AS a_id, b.vec_id AS b_id
     FROM e a JOIN e b ON a.vec_id < b.vec_id
-    WHERE list_cosine_similarity(a.embedding, b.embedding) >= {_NEARDUP_TAU}
+    WHERE {_duckdb_cosine("a.embedding", "b.embedding")} >= {_NEARDUP_TAU}
     """,
 )
 def q_dedup_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3689,8 +3628,8 @@ def _semantic_dedup_oracle_sql(sf_dir: str = "/root/testdata/sf0.01") -> str:
     dup AS (SELECT DISTINCT x.vec_id
             FROM asg x JOIN asg y
               ON x.cluster_id = y.cluster_id AND y.vec_id < x.vec_id
-            WHERE list_cosine_similarity(CAST(x.embedding AS DOUBLE[]),
-                                         CAST(y.embedding AS DOUBLE[]))
+            WHERE {_duckdb_cosine("CAST(x.embedding AS DOUBLE[])",
+                                  "CAST(y.embedding AS DOUBLE[])")}
                   >= {_SEMDEDUP_TAU})
     SELECT asg.vec_id, asg.cluster_id,
            CAST(CASE WHEN dup.vec_id IS NULL THEN 1 ELSE 0 END AS INTEGER) AS kept
@@ -4512,27 +4451,30 @@ def q_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _sql_query(spark, sf_dir, _countmin_sql("spark"), views=("events",))
 
 
-def _pagerank_sql(dialect: str) -> str:
+def _pagerank_tail_sql(flows: str, dialect: str) -> str:
+    """5-round fixed-point PageRank over the cell-flow relation ``flows``
+    (``_od_flows_sql``'s columns)."""
     from geografir_spark.operators import graph
 
-    edges = (
-        f"SELECT cell_from, cell_to, n_moves FROM ({_od_flows_sql(dialect)})"
-    )
     return graph.pagerank_sql(
-        edges, "cell_from", "cell_to", "n_moves", dialect, iters=5
+        f"SELECT cell_from, cell_to, n_moves FROM {flows}",
+        "cell_from", "cell_to", "n_moves", dialect, iters=5,
     )
 
 
-@register("pagerank_cells", _pagerank_sql("duckdb"))
+@register(
+    "pagerank_cells", _pagerank_tail_sql(f"({_od_flows_sql('duckdb')})", "duckdb")
+)
 def q_pagerank_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the origin→destination cell-flow graph — 5 rounds of
     integer fixed-point rank propagation (scale 10^12), bit-identical in
     both engines because every term is a BIGINT floor-division and integer
-    sums are order-insensitive (operators/graph.py). The unrolled-SQL form
-    re-derives the cheap page-graph base per round; the production
-    ``graph.pagerank`` DataFrame path localCheckpoints edges once (tested
-    equal)."""
-    return _sql_query(spark, sf_dir, _pagerank_sql("spark"))
+    sums are order-insensitive (operators/graph.py). Engine side: the flow
+    matrix is localCheckpointed and the oracle's own unrolled tail runs
+    over it — Spark inlines CTEs, so without the barrier every round
+    re-derived the geocode and the per-host window."""
+    cc = _sql_query(spark, sf_dir, _od_flows_sql("spark")).localCheckpoint()
+    return spark.sql(_pagerank_tail_sql("{cc}", "spark"), cc=cc)
 
 
 def _packing_sql(dialect: str) -> str:

@@ -140,3 +140,32 @@ def test_lsh_fed_jaccard_recall(spark):
     }
     recall = len(got & exact) / len(exact) if exact else 1.0
     assert recall >= 0.9, f"LSH recall {recall:.2f} over {len(exact)} pairs"
+
+
+def test_registry_minhash_pairs_honour_the_cap(spark, tmp_path):
+    """``dedup_minhash_pairs`` over 300 identical documents (one bucket of
+    300 per band) emits the capped pair set, Σ_{i<256} (299 − i) = 43,904,
+    like its DuckDB oracle; the uncapped set would be 300·299/2 = 44,850."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from geografir_spark.queries import QUERIES, resolve_oracle
+
+    n = 300
+    pq.write_table(
+        pa.table({
+            "doc_id": pa.array(range(n), pa.int64()),
+            "text": ["the same boilerplate navigation header text repeated"] * n,
+        }),
+        tmp_path / "documents.parquet",
+    )
+    q = QUERIES["dedup_minhash_pairs"]
+    expected = sum(n - 1 - i for i in range(MAX_BUCKET))
+    assert expected == 43_904
+    assert q.fn(spark, str(tmp_path)).count() == expected
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{tmp_path}/documents.parquet')"
+    )
+    assert len(con.execute(resolve_oracle(q)).fetchall()) == expected

@@ -1,5 +1,6 @@
 """PageRank operator semantics: hand-checked fixed-point arithmetic, the
-DataFrame production path vs the unrolled SQL, and dialect agreement."""
+unrolled SQL over a bound frame vs over a temp view, and dialect
+agreement."""
 
 from __future__ import annotations
 
@@ -8,7 +9,6 @@ import duckdb
 from geografir_spark.operators.graph import (
     SCALE,
     TELEPORT,
-    pagerank,
     pagerank_sql,
 )
 
@@ -37,15 +37,14 @@ def test_pagerank_one_round_by_hand(spark):
     assert out["d"]["w_in"] == 0 and out["d"]["w_out"] == 5
 
 
-def test_pagerank_dataframe_path_equals_sql(spark):
-    want = {
-        k: v["rank_scaled"] for k, v in _spark_sql_ranks(spark, EDGES, 5).items()
-    }
-    e = spark.createDataFrame(EDGES, "s string, d string, w long")
-    got = {
-        r["node"]: r["rank_scaled"]
-        for r in pagerank(e, "s", "d", "w", iters=5).collect()
-    }
+def test_pagerank_sql_over_bound_frame_equals_view(spark):
+    """``pagerank_sql`` over a frame bound with ``spark.sql(..., cc=frame)``
+    — the binding ``pagerank_cells`` runs over its checkpointed flows —
+    gives the same ranks as over a temp view."""
+    want = _spark_sql_ranks(spark, EDGES, 5)
+    e = spark.createDataFrame(EDGES, "s string, d string, w long").localCheckpoint()
+    sql = pagerank_sql("SELECT s, d, w FROM {cc}", "s", "d", "w", "spark", 5)
+    got = {r["node"]: r.asDict() for r in spark.sql(sql, cc=e).collect()}
     assert got == want
 
 

@@ -247,19 +247,36 @@ def test_with_ivf_lists_sim_col(spark):
 
 
 def test_cosine_sql_zero_vector_reads_zero(spark):
-    """A zero-norm side reads 0.0. An unguarded cosine divides by a zero
-    norm product, which raises DIVIDE_BY_ZERO under ANSI SQL (NULL without
-    it), and the hybrid_retrieval_rrf semantic leg ranks by this
-    expression."""
+    """A zero-norm side reads 0.0 in the engine's cosine and in the
+    oracles' DuckDB cosine alike. An unguarded Spark cosine divides by a
+    zero norm product, which raises DIVIDE_BY_ZERO under ANSI SQL (NULL
+    without it); DuckDB 1.0's bare ``list_cosine_similarity`` reads -1.0.
+    The hybrid_retrieval_rrf semantic leg and the ANN oracles rank by
+    these expressions."""
+    import duckdb
+
     from geografir_spark.queries import _cos_expr
 
-    df = spark.createDataFrame(
-        [([0.0, 0.0], [1.0, 2.0]), ([0.0, 0.0], [0.0, 0.0]), ([1.0, 0.0], [1.0, 1.0])],
-        "pvec ARRAY<DOUBLE>, tvec ARRAY<DOUBLE>",
-    )
+    rows = [([0.0, 0.0], [1.0, 2.0]), ([0.0, 0.0], [0.0, 0.0]), ([1.0, 0.0], [1.0, 1.0])]
+    df = spark.createDataFrame(rows, "pvec ARRAY<DOUBLE>, tvec ARRAY<DOUBLE>")
     got = [r["c"] for r in df.selectExpr(f"{_cos_expr('spark')} AS c").collect()]
     assert got[:2] == [0.0, 0.0]
     assert got[2] == pytest.approx(2**-0.5, rel=1e-15)
+
+    con = duckdb.connect()
+    for elem in ("DOUBLE", "FLOAT"):
+        duck = [
+            r[0]
+            for r in con.execute(
+                f"SELECT {_cos_expr('duckdb')} FROM (SELECT"
+                f" CAST(pvec AS {elem}[]) AS pvec, CAST(tvec AS {elem}[]) AS tvec,"
+                f" i FROM (VALUES (0, ?, ?), (1, ?, ?), (2, ?, ?)) v(i, pvec, tvec))"
+                f" ORDER BY i",
+                [x for pair in rows for x in pair],
+            ).fetchall()
+        ]
+        assert duck[:2] == [0.0, 0.0], elem
+        assert duck[2] == pytest.approx(2**-0.5, rel=1e-6), elem
 
     from geografir_spark.operators.similarity import cosine_sql
 
